@@ -10,13 +10,69 @@ gracefully on local[N]:
     (processor/processor.go:1026-1054); keeps parity with the DuckDB oracle.
   - Arrow enabled: all Python<->JVM transfer (Pandas UDFs, createDataFrame)
     is vectorized.
+  - Host-sized defaults (``host_settings``): cores, heap, pre-touch and
+    scratch come from the host the process runs on; every
+    ``SPARK_GRAFT_*`` variable overrides its default.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import SparkSession
+
+_MiB = 1 << 20
+_HEAP_CAP = 24 << 30
+_SHM = "/dev/shm"
+
+
+def host_memory_bytes() -> int:
+    """Memory this process may use: the cgroup v2 ``memory.max`` limit or
+    the kernel's MemAvailable, whichever is smaller."""
+    limits = []
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            limits.append(int(fh.read()))
+    except (OSError, ValueError):  # no cgroup v2, or "max" (unlimited)
+        pass
+    with open("/proc/meminfo") as fh:
+        limits += [int(ln.split()[1]) * 1024 for ln in fh if ln.startswith("MemAvailable:")]
+    return min(limits)
+
+
+def _size_bytes(size: str) -> int:
+    """JVM size string ("2g", "512m", "1048576") to bytes."""
+    unit = "kmgt".find(size[-1].lower()) + 1
+    return int(size[:-1] if unit else size) << (10 * unit)
+
+
+def host_settings(env=os.environ) -> dict:
+    """Session defaults sized to the host, each overridable by its
+    ``SPARK_GRAFT_*`` variable in ``env``:
+
+    - ``cpus``: the cores this process may run on (``sched_getaffinity``);
+    - ``heap``: half the host memory, capped at 24 GiB — the other half
+      stays for off-heap, the Python workers and the page cache;
+    - ``pretouch``: -Xms=-Xmx + AlwaysPreTouch only when the heap fits in
+      that half (pre-touching a heap the host cannot back fails the JVM
+      start);
+    - ``local_dir``: /dev/shm scratch only when it has a heap's worth of
+      room, else Spark's default (None).
+    """
+    host = host_memory_bytes()
+    heap = env.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(_HEAP_CAP, host // 2) // _MiB}m"
+    local_dir = env.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir is None and os.path.isdir(_SHM) and (
+        shutil.disk_usage(_SHM).free >= _size_bytes(heap)
+    ):
+        local_dir = os.path.join(_SHM, "spark-local")
+    return {
+        "cpus": env.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0))),
+        "heap": heap,
+        "pretouch": _size_bytes(heap) <= host // 2,
+        "local_dir": local_dir,
+    }
 
 
 def get_spark(
@@ -26,7 +82,8 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession used across the engine."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host = host_settings()
+    cpus = host["cpus"]
     master = master or f"local[{cpus}]"
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
     b = (
@@ -44,7 +101,7 @@ def get_spark(
         # py4j round-trips → ~12k). Debug sugar, off in production; flip
         # on when chasing a plan-origin error message.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", host["heap"])
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the driver fixtures write TIMESTAMP(NANOS) parquet, which Spark
@@ -75,14 +132,6 @@ def get_spark(
                 "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", str(64 * 1024 * 1024)
             ),
         )
-        # local-mode shuffle/spill on tmpfs: single-node shuffle files are
-        # transient and re-creatable, so RAM-backed scratch removes disk IO
-        # and the page-cache/mmap churn of many small shuffle files. A real
-        # cluster deployment overrides this to fast local SSDs.
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/spark-local"),
-        )
         # whole-stage codegen emits one generated class per stage; across
         # ~50 distinct query plans the JVM's default 240 MB code cache fills
         # and the JIT silently stops compiling — later queries then run
@@ -97,10 +146,16 @@ def get_spark(
         # for any latency-sensitive JVM service.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing "
-            f"-Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '24g')} -XX:+AlwaysPreTouch",
+            "-XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing"
+            + (f" -Xms{host['heap']} -XX:+AlwaysPreTouch" if host["pretouch"] else ""),
         )
     )
+    # local-mode shuffle/spill on tmpfs: single-node shuffle files are
+    # transient and re-creatable, so RAM-backed scratch removes disk IO
+    # and the page-cache/mmap churn of many small shuffle files. A real
+    # cluster deployment overrides this to fast local SSDs.
+    if host["local_dir"]:
+        b = b.config("spark.local.dir", host["local_dir"])
     if extra_conf:
         for k, v in extra_conf.items():
             b = b.config(k, v)

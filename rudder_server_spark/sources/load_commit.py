@@ -50,11 +50,31 @@ def committed_ids(table_dir: str) -> set[str]:
         return set()
 
 
-def _record_commit(table_dir: str, upload_id: str) -> None:
+def record_commit(table_dir: str, upload_id: str) -> None:
+    """Append ``upload_id`` to the directory's ``_COMMITTED`` log."""
     with open(os.path.join(table_dir, _COMMITTED), "a") as fh:
         fh.write(upload_id + "\n")
         fh.flush()
         os.fsync(fh.fileno())
+
+
+def refused(table_dir: str, upload_id: str) -> bool:
+    """True when ``upload_id`` already committed here (idempotent retry).
+
+    Checked against the append-only ``_COMMITTED`` log, not just the live
+    pointer: a retry of upload A arriving AFTER upload B has committed
+    must be a no-op, not a regression of the table to A. (The pointer
+    check alone would re-commit A — the reordered-retry hazard.) A pointer
+    that names the id while the log lacks it means the crash hit between
+    the pointer swap and the log append — heal the log so the id stays
+    refused after later uploads move on.
+    """
+    if upload_id in committed_ids(table_dir):
+        return True
+    if current_version(table_dir) == upload_id:
+        record_commit(table_dir, upload_id)
+        return True
+    return False
 
 
 def current_version(table_dir: str) -> str | None:
@@ -75,25 +95,31 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     return spark.read.parquet(os.path.join(table_dir, _VERSIONS, v))
 
 
+def row_count(table_dir: str) -> int:
+    """Rows in the live snapshot, summed from its parquet footers — commit
+    metadata, not data: no Spark job (0 for an empty table)."""
+    import pyarrow.parquet as pq
+
+    v = current_version(table_dir)
+    if v is None:
+        return 0
+    vdir = os.path.join(table_dir, _VERSIONS, v)
+    return sum(
+        pq.ParquetFile(os.path.join(vdir, f)).metadata.num_rows
+        for f in os.listdir(vdir)
+        if f.endswith(".parquet")
+    )
+
+
 def commit_overwrite(df: DataFrame, table_dir: str, upload_id: str) -> bool:
     """Publish ``df`` as the table's new contents, atomically.
 
     Returns True if this call performed the commit, False if ``upload_id``
-    was already committed (idempotent retry). The snapshot is fully written
+    was already committed (``refused``). The snapshot is fully written
     before the pointer moves; a crash at any point leaves the previous
     version live.
-
-    Idempotency is checked against the append-only ``_COMMITTED`` log, not
-    just the live pointer: a retry of upload A arriving AFTER upload B has
-    committed must be a no-op, not a regression of the table to A. (The
-    pointer check alone would re-commit A — the reordered-retry hazard.)
     """
-    if upload_id in committed_ids(table_dir):
-        return False
-    if current_version(table_dir) == upload_id:
-        # committed previously but the crash hit before the log append —
-        # heal the log so the id stays refused after later uploads move on
-        _record_commit(table_dir, upload_id)
+    if refused(table_dir, upload_id):
         return False
     staged = os.path.join(table_dir, _VERSIONS, upload_id)
     df.write.mode("overwrite").parquet(staged)
@@ -104,7 +130,7 @@ def commit_overwrite(df: DataFrame, table_dir: str, upload_id: str) -> bool:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, os.path.join(table_dir, _POINTER))  # the commit point
-    _record_commit(table_dir, upload_id)
+    record_commit(table_dir, upload_id)
     return True
 
 
@@ -121,7 +147,7 @@ def commit_merge(
     publish the result under ``upload_id``. Idempotent per upload id."""
     from rudder_server_spark.operators.load import merge_into
 
-    if upload_id in committed_ids(table_dir) or current_version(table_dir) == upload_id:
+    if refused(table_dir, upload_id):
         return False
     existing = read_table(spark, table_dir)
     merged = merge_into(existing, staging, pk, order_col)

@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rudder_server_spark.operators.envelope import normalize_envelope
+from rudder_server_spark.pipeline_warehouse import commit_tables, run_warehouse_upload
 
 ENVELOPE_SCHEMA = (
     "message_id string, user_id long, anonymous_id string, event_type string, "
@@ -119,14 +120,6 @@ def warehouse_sink(
     Parquet append per table; the streaming checkpoint provides the
     effectively-once guarantee the reference gets from its jobsdb txn.
 
-    ``destination_type`` routes the identity merge rules through the same
-    index-length constraints as the batch upload path
-    (operators/constraints.py; warehouse/constraints/constraint.go via
-    slave/worker.go:404-446): on BQ/Snowflake a violating cell swaps to
-    its ViolatedIdentifier and the original value appends to
-    ``rudder_discards`` — streaming and batch loads share the operator,
-    so a violating rule is discarded identically in both.
-
     ``schemas``/``promote`` are the cached consolidation verdicts from the
     schema registry (wh_schemas, warehouse/schema/schema.go:205-343): the
     reference fetches the warehouse schema once and reuses it per upload
@@ -134,15 +127,12 @@ def warehouse_sink(
     the per-micro-batch discovery + promotion-sampling jobs. Left None,
     each batch discovers its own (first-batch bootstrap).
 
-    The per-table writes are independent jobs over ONE materialized parsed
-    frame, so after the first write (which forces the shared lazy
-    localCheckpoint) the rest are submitted concurrently — the same
-    concurrent-upload shape as the reference's per-table warehouse loaders
-    (warehouse/router.go worker pool), and on local mode it collapses the
-    sink from O(n_tables) serial job latencies to ~2 job latencies.
+    The tables go through the batch upload's ``commit_tables``, so
+    ``destination_type`` applies the same index-length constraints (a
+    violating rule is discarded identically in both paths) and the
+    per-table writes over ONE materialized parsed frame run on its writer
+    pool — on local mode ~2 job latencies instead of O(n_tables) serial.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from rudder_server_spark.operators.event_tables import event_table_fanout
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -164,81 +154,9 @@ def warehouse_sink(
             # distributed CC path if a batch exceeds the cap)
             small_graph=True,
         )
-        # side dict, not item assignment: tables is a lazy mapping whose
-        # deferred thunks must stay unforced until their write
-        overrides: dict[str, DataFrame] = {}
-        if (
-            destination_type is not None
-            and "rudder_identity_merge_rules" in tables
-        ):
-            from rudder_server_spark.operators.constraints import (
-                INDEX_CONSTRAINTS,
-                apply_index_constraints,
-            )
-
-            if destination_type in INDEX_CONSTRAINTS:
-                loaded, discards = apply_index_constraints(
-                    tables["rudder_identity_merge_rules"],
-                    destination_type,
-                    "rudder_identity_merge_rules",
-                )
-                overrides["rudder_identity_merge_rules"] = loaded
-                # same gate as the batch path (pipeline_warehouse.py): the
-                # discards load file only exists when discard rows exist —
-                # the emptiness probe is a narrow filter over the small
-                # per-batch merge-rules frame
-                if "rudder_discards" in tables:
-                    overrides["rudder_discards"] = tables[
-                        "rudder_discards"
-                    ].unionByName(discards, allowMissingColumns=True)
-                elif not discards.isEmpty():
-                    overrides["rudder_discards"] = discards
-        names = list(tables)
-        names += [n for n in overrides if n not in names]
-
-        def table(n: str) -> DataFrame:
-            return overrides[n] if n in overrides else tables[n]
-        # identity tables derive from their own merge-payload parse — NOT
-        # the shared flattened frame — and mappings runs the connected-
-        # components convergence loop (several sequential jobs: the sink's
-        # critical path). Launch them first so that loop overlaps all the
-        # standard-table writes instead of queuing behind them.
-        identity = sorted(
-            (n for n in names if n.startswith("rudder_identity_")),
-            # merge_rules first: it is the cheap consumer of the shared lazy
-            # localCheckpoint of the rules frame (event_tables rules()), so
-            # writing it SERIALLY forces that checkpoint exactly once before
-            # mappings' CC loop and avoids the concurrent-first-touch
-            # duplicate merge-payload parse.
-            key=lambda n: (n != "rudder_identity_merge_rules", n),
+        commit_tables(
+            tables, lambda n, df: _write(df, os.path.join(out_dir, n)), destination_type
         )
-        standard = [n for n in names if not n.startswith("rudder_identity_")]
-        # 6 writer threads, not one per table: each write is a single-task
-        # job whose submission is driver-side Python (py4j + GIL), so wide
-        # pools contend on the driver lock instead of overlapping executor
-        # work (interleaved A/B at bench scale: 16 workers 2.68 s min /
-        # 2.7-3.9 band vs 6 workers 2.27 s / 2.27-2.37 band for the whole
-        # q18 run). Enough width to overlap the CC critical path with the
-        # standard tables; a cluster sink sizes this to its commit
-        # concurrency, not table count.
-        with ThreadPoolExecutor(max_workers=min(6, len(names))) as ex:
-            if identity:
-                _write(table(identity[0]), os.path.join(out_dir, identity[0]))
-            futs = [
-                ex.submit(_write, table(n), os.path.join(out_dir, n))
-                for n in identity[1:]
-            ]
-            if standard:
-                # first standard write serially: it materializes the shared
-                # flattened frame's lazy checkpoint exactly once (concurrent
-                # first-touch would re-parse per thread)
-                _write(table(standard[0]), os.path.join(out_dir, standard[0]))
-                futs += [
-                    ex.submit(_write, table(n), os.path.join(out_dir, n))
-                    for n in standard[1:]
-                ]
-            for f in futs:
-                f.result()
 
     return write_batch
 
@@ -511,42 +429,26 @@ def suppression_refresh_sink(out_dir: str, suppression_path: str):
 
 
 def transactional_warehouse_sink(out_dir: str):
-    """foreachBatch fan-out sink committed through the atomic pointer-swap
-    protocol (sources/load_commit.py) with ``upload_id = epoch-<id>`` —
-    unifying the streaming and batch commit stories: a REPLAYED epoch
-    (crash between sink completion and checkpoint commit — the window
-    where plain parquet append double-writes) is refused by the
-    idempotency log, so every table advances exactly once per epoch.
-    Per-table MERGE semantics where the table carries (id, received_at);
-    tables without a pk column publish as whole-snapshot overwrites.
+    """foreachBatch sink that commits each micro-batch as one batch upload
+    (``run_warehouse_upload``) with ``upload_id = epoch-<id>`` — one
+    table-commit path for streaming and batch: every table MERGEs on its
+    own key through load_commit's atomic pointer swap, and a REPLAYED
+    epoch (crash between sink completion and checkpoint commit — the
+    window where plain parquet append double-writes) is refused by the
+    upload's idempotency log, so every table advances exactly once per
+    epoch (the Structured Streaming exactly-once sink: idempotent writes
+    keyed by the epoch id).
     """
-    from rudder_server_spark.operators.event_tables import event_table_fanout
-    from rudder_server_spark.sources.load_commit import (
-        commit_merge,
-        commit_overwrite,
-        read_table,
-    )
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        upload_id = f"epoch-{epoch_id:020d}"
-        batch_df = batch_df.localCheckpoint(eager=True)
-        for name, table in event_table_fanout(batch_df, materialize=True).items():
-            tdir = os.path.join(out_dir, name)
-            if "id" in table.columns and "received_at" in table.columns:
-                commit_merge(
-                    spark, table, tdir, upload_id, pk=("id",), order_col="received_at"
-                )
-            else:
-                existing = read_table(spark, tdir)
-                union = (
-                    existing.unionByName(table, allowMissingColumns=True)
-                    if existing is not None
-                    else table
-                )
-                commit_overwrite(union, tdir, upload_id)
+        # lazy checkpoint: the upload's several jobs re-use one execution
+        # of the batch plan, and a refused replay never runs it at all
+        run_warehouse_upload(
+            batch_df.sparkSession, batch_df.localCheckpoint(eager=False),
+            out_dir, f"epoch-{epoch_id:020d}",
+        )
 
     return write_batch
 

@@ -90,6 +90,25 @@ def test_reordered_retry_cannot_regress(spark, tmp_path):
     assert [r["id"] for r in read_table(spark, d).collect()] == [2]
 
 
+def test_commit_merge_heals_log_after_crash_before_append(spark, tmp_path):
+    """A crash between commit_merge's pointer swap and its log append
+    leaves the pointer naming A while the log lacks A. The retry of A must
+    heal the log, so a late retry of A after B has committed stays refused
+    instead of merging A's rows back over B's."""
+    t = str(tmp_path / "users")
+    schema = "id long, received_at string, val string"
+    a = spark.createDataFrame([(1, "2024-01-01", "A-old")], schema)
+    b = spark.createDataFrame([(1, "2024-02-01", "B-new")], schema)
+    assert commit_merge(spark, a, t, "A") is True
+    os.remove(os.path.join(t, "_COMMITTED"))  # the log append never happened
+
+    assert commit_merge(spark, a, t, "A") is False  # retry: already live
+    assert commit_merge(spark, b, t, "B") is True
+    assert commit_merge(spark, a, t, "A") is False  # late retry: refused
+    assert current_version(t) == "B"
+    assert [r["val"] for r in read_table(spark, t).collect()] == ["B-new"]
+
+
 def test_transactional_streaming_sink_epoch_replay(spark, tmp_path):
     """The streaming/batch commit unification: a replayed epoch (same
     epoch_id re-delivered after a crash-before-checkpoint) is a no-op —

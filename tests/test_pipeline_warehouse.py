@@ -5,6 +5,11 @@ a re-run of a committed upload must be a no-op,
 processor.go:2835-3098 / state_update_table_uploads.go)."""
 
 import datetime as dt
+import itertools
+import os
+from collections import Counter
+
+import pytest
 
 from rudder_server_spark.pipeline_warehouse import run_warehouse_upload
 from rudder_server_spark.sources import load_commit
@@ -67,7 +72,7 @@ def test_upload_merge_and_replay(spark, tmp_path):
     assert load_commit.current_version(f"{wh}/tracks") == "up-2"
 
 
-def _merge_event(i, prop1_value):
+def _merge_event(i, prop1_value, prop2_value=None):
     import json
 
     return _env(
@@ -76,7 +81,7 @@ def _merge_event(i, prop1_value):
             "type": "merge",
             "mergeProperties": [
                 {"type": "email", "value": prop1_value},
-                {"type": "anonymousId", "value": f"anon-{i:04d}"},
+                {"type": "anonymousId", "value": prop2_value or f"anon-{i:04d}"},
             ],
         }),
     )
@@ -137,3 +142,83 @@ def test_bq_zero_violation_upload_writes_no_discards_table(spark, tmp_path):
         spark, str(tmp_path / "whbq_clean" / "rudder_identity_merge_rules")
     )
     assert rules.count() == 2
+
+
+def _landed(spark, wh):
+    """{table: Counter of live rows} for every table directory under wh."""
+    return {
+        t.name: Counter(tuple(r) for r in load_commit.read_table(spark, t.path).collect())
+        for t in os.scandir(wh) if t.is_dir()
+    }
+
+
+def test_streaming_and_batch_commit_paths_land_the_same_rows(spark, tmp_path):
+    """The transactional streaming sink (one epoch per batch) and the batch
+    upload commit through one table-commit path: the same two merge-event
+    batches land the same rows in every table. The second batch re-sends a
+    rule under a new message id (a MERGE on the full rule keeps one row)
+    and links the mapped identifier a@x.io to a new one (mappings MERGE on
+    the identifier, not append)."""
+    from rudder_server_spark.streaming.pipeline import transactional_warehouse_sink
+
+    batches = [
+        [_merge_event(0, "a@x.io"), _merge_event(1, "b@x.io")],
+        [_merge_event(2, "a@x.io", "anon-0000"), _merge_event(3, "a@x.io")],
+    ]
+    stream_wh, batch_wh = str(tmp_path / "stream"), str(tmp_path / "batch")
+    sink = transactional_warehouse_sink(stream_wh)
+    for epoch, rows in enumerate(batches, start=1):
+        df = spark.createDataFrame(rows, SCHEMA)
+        sink(df, epoch)
+        run_warehouse_upload(spark, df, batch_wh, f"up-{epoch}")
+
+    streamed, uploaded = _landed(spark, stream_wh), _landed(spark, batch_wh)
+    assert streamed == uploaded
+    assert sum(uploaded["rudder_identity_merge_rules"].values()) == 3
+    assert sum(uploaded["rudder_identity_mappings"].values()) == 5
+
+
+def test_crashed_upload_retries_remaining_tables_then_replays_free(
+    spark, tmp_path, monkeypatch
+):
+    """A crash on the k-th table MERGE leaves the upload open: its retry
+    lands the remaining tables and each table's own log refuses the ones
+    that already committed. Once every table has landed, a replay is
+    answered from the warehouse's log and the footers with no Spark job."""
+    wh = str(tmp_path / "wh")
+    batch = spark.createDataFrame(
+        [_track(0, 10.0), _track(1, 11.0), _merge_event(2, "a@x.io")], SCHEMA
+    )
+    merge, calls = load_commit.commit_merge, itertools.count(1)
+
+    def crash_on_third(*args, **kwargs):
+        if next(calls) == 3:
+            raise RuntimeError("crash on the third table")
+        return merge(*args, **kwargs)
+
+    monkeypatch.setattr(load_commit, "commit_merge", crash_on_third)
+    with pytest.raises(RuntimeError, match="third table"):
+        run_warehouse_upload(spark, batch, wh, "up-1")
+    monkeypatch.undo()
+    landed = {
+        t.name for t in os.scandir(wh)
+        if t.is_dir() and "up-1" in load_commit.committed_ids(t.path)
+    }
+
+    retry = run_warehouse_upload(spark, batch, wh, "up-1")
+    assert landed and set(retry["tables"]) - landed
+    assert {t for t, c in retry["committed"].items() if not c} == landed
+    counts = {r["table_name"]: r["n"] for r in retry["counts"].collect()}
+    assert counts["tracks"] == 2
+
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-probe", "replay of a committed upload")
+    try:
+        replay = run_warehouse_upload(spark, batch, wh, "up-1")
+        jobs = sc.statusTracker().getJobIdsForGroup("replay-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert replay["tables"] == retry["tables"]
+    assert not any(replay["committed"].values())
+    assert {r["table_name"]: r["n"] for r in replay["counts"].collect()} == counts
