@@ -6,8 +6,8 @@
   dimension side is a few MB, so every executor joins locally; no shuffle
   of the event stream.
 - Bot: UA-based detection at the gateway (gateway/handle.go:415-422,
-  internal/enricher/bot.go:23-59) — a codegen'd rlike over the UA string;
-  enrich-or-drop per config (processor/processor.go:2004-2036).
+  internal/enricher/bot.go:23-59) — a codegen'd rlike over the UA string
+  that callers enrich with or filter on (processor/processor.go:2004-2036).
 """
 
 from __future__ import annotations
@@ -54,8 +54,3 @@ BOT_UA_REGEX = r"(?i)(bot|crawler|spider|crawling|scraper|curl/|wget/|python-req
 def bot_flag(ua: Column) -> Column:
     """P10: boolean bot marker from the user-agent string."""
     return F.coalesce(ua.rlike(BOT_UA_REGEX), F.lit(False))
-
-
-def drop_bots(df: DataFrame, ua_col: str = "user_agent") -> DataFrame:
-    """Gateway 'drop bot events' mode (processor/processor.go:2004-2036)."""
-    return df.where(~bot_flag(F.col(ua_col)))

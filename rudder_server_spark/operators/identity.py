@@ -63,7 +63,6 @@ def connected_components(
     max_iter: int = 50,
     broadcast_threshold: int = 1_000_000,
     broadcast_bytes: int = 256 * 2**20,
-    assume_small: bool = False,
 ) -> DataFrame:
     """Compute connected components over an undirected graph whose node ids
     are any orderable Spark type (string identifiers, long doc ids, ...).
@@ -101,21 +100,7 @@ def connected_components(
 
     id_type = sym.schema["a"].dataType.simpleString()
     fits_driver = False
-    rows = None
-    if broadcast_threshold and assume_small and id_type == "string":
-        # caller-vouched small graph (a micro-batch, a bounded staging
-        # slice): skip the byte-stats job and gate-and-fetch in ONE job —
-        # a capped collect whose transient driver footprint the caller
-        # vouches is identifier-sized strings, not blobs. Over the cap →
-        # fall through to the normal two-job gate below (safe for a
-        # caller that vouched wrong).
-        cap = min(65_536, 2 * broadcast_threshold)
-        rows = sym.limit(cap + 1).collect()
-        if len(rows) <= cap:
-            fits_driver = True
-        else:
-            rows = None
-    if broadcast_threshold and not fits_driver:
+    if broadcast_threshold:
         if id_type == "string":
             # variable-width ids: byte-gate BEFORE collecting — edge count
             # alone doesn't bound driver memory when identifiers are long
@@ -139,8 +124,6 @@ def connected_components(
             cap = min(2 * broadcast_threshold, broadcast_bytes // 136)
             rows = sym.limit(cap + 1).collect()
             fits_driver = len(rows) <= cap
-            if not fits_driver:
-                rows = None
 
     LAST_RUN["path"] = "driver" if fits_driver else "distributed"
     LAST_RUN["iterations"] = 0

@@ -1,4 +1,4 @@
-"""Reporting / stats aggregates (reference A2/A5/A6/A8/A9) and the
+"""Reporting / stats aggregates (reference A5/A8/A9) and the
 warehouse sync-window scheduler (§2.10).
 
 Each is a plain groupBy — partial (map-side) aggregation everywhere, so at
@@ -8,24 +8,6 @@ Each is a plain groupBy — partial (map-side) aggregation everywhere, so at
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-
-def reporting_rollup(
-    df: DataFrame,
-    label_cols: tuple,
-    ts_col: str = "reported_at",
-    count_col: str = "count",
-    bucket: str = "1 minute",
-) -> DataFrame:
-    """A2 (enterprise/reporting/reporting.go:262-334): metrics grouped by
-    the label set + minute bucket; sum counts, max reported_at, and the
-    last sample per group (max_by)."""
-    return df.groupBy(
-        *[F.col(c) for c in label_cols], F.window(ts_col, bucket).alias("bucket")
-    ).agg(
-        F.sum(count_col).alias("count"),
-        F.max(ts_col).alias("max_reported_at"),
-    )
 
 
 def staging_file_stats(
@@ -45,14 +27,6 @@ def staging_file_stats(
         F.min(ts_col).alias("first_event_at"),
         F.max(ts_col).alias("last_event_at"),
     )
-
-
-def table_upload_counts(
-    df: DataFrame, upload_col: str = "upload_id", table_col: str = "table_name"
-) -> DataFrame:
-    """A6 (warehouse/router/state_update_table_uploads.go): events per
-    (upload, table) to verify load completeness."""
-    return df.groupBy(upload_col, table_col).agg(F.count("*").alias("n"))
 
 
 def gateway_event_stats(

@@ -60,32 +60,6 @@ def token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_REGEX), 0))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Length / punctuation / stopword ratio features + a composite score.
-
-    Ratios use integer counts over integer lengths cast late to double, so
-    they are bit-deterministic across engines.
-    """
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    n_alpha = F.length(F.regexp_replace(t, "[^A-Za-z]", ""))
-    n_punct = F.length(F.regexp_replace(t, "[^.,;:!?'\"]", ""))
-    n_ws = F.length(F.regexp_replace(t, "[^ \\t\\n]", ""))
-    n_tokens = token_count(t)
-    stop_hits = marker_hits(t, "en")
-    return df.select(
-        "*",
-        n_chars.alias("q_n_chars"),
-        n_tokens.alias("q_n_tokens"),
-        (n_alpha.cast("double") / F.greatest(n_chars, F.lit(1))).alias("q_alpha_ratio"),
-        (n_punct.cast("double") / F.greatest(n_chars, F.lit(1))).alias("q_punct_ratio"),
-        (n_ws.cast("double") / F.greatest(n_chars, F.lit(1))).alias("q_ws_ratio"),
-        (stop_hits.cast("double") / F.greatest(n_tokens, F.lit(1)).cast("double")).alias(
-            "q_stopword_ratio"
-        ),
-    )
-
-
 def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
 

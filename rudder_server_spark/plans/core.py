@@ -3104,12 +3104,12 @@ def q93(spark, sf):
 
     # plain narrow scan, NOT fan_out: REVERTED in r12 (VERDICT r11 "what's
     # wrong" #2). The r11 fan cost a pure extra Exchange at bench scale
-    # (driver v2 ratio 26.6 -> 39.2; r12 interleaved A/B/C in bench/ab_q93.py:
-    # plain 0.96 vs fan-width 1.10 vs cap-8 1.03 min — plain wins). The
-    # archiver's per-row work (date math + concat) is too cheap to qualify
-    # for the fan gate, and on any real multi-row-group corpus fan_out
-    # no-ops anyway, so the fan only ever changed the single-row-group
-    # bench plan.
+    # (bench v2 ratio 26.6 -> 39.2; r12 interleaved A/B/C in
+    # 77849b4:bench/ab_q93.py: plain 0.96 vs fan-width 1.10 vs cap-8 1.03
+    # min — plain wins). The archiver's per-row work (date math + concat)
+    # is too cheap to qualify for the fan gate, and on any real
+    # multi-row-group corpus fan_out no-ops anyway, so the fan only ever
+    # changed the single-row-group bench plan.
     e = load_table(spark, sf, "events").select("event_id", "event_type", "ts")
     d = F.to_date("ts")
     dom = F.dayofmonth(d)
@@ -3522,9 +3522,9 @@ def q98(spark, sf):
     # sequential_accept's lazy localCheckpoint, whose Catalyst physical
     # planning is JVM-side work that parallelizes across threads (py4j
     # releases the GIL on socket waits). Guide §2.6 applied to plan
-    # construction — measured ~0.6 s off the per-call build (bench/
-    # ab_q98threads.py); the produced plans, union order and results are
-    # identical to building the branches sequentially.
+    # construction — measured ~0.6 s off the per-call build
+    # (77849b4:bench/ab_q98threads.py); the produced plans, union order and
+    # results are identical to building the branches sequentially.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=4) as pool:

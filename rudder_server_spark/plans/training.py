@@ -43,7 +43,7 @@ def _emb(spark, sf):
     """embeddings, plain scan. r11 fanned this to cluster width like
     :func:`_docs`; REVERTED in r12 per the driver's ground truth (VERDICT
     r11 "what's wrong" #3): the r11 driver bench read t56 0.66x, and the
-    r12 adjacent-pair interleaved A/B (bench/compare_ab_r12.json) caught
+    r12 adjacent-pair interleaved A/B (77849b4:bench/compare_ab_r12.json) caught
     the fanned shape in a catastrophic bimodal mode — occasional 7-17 s
     runs (median pair ratio 0.17) that the plain scan never hits. The
     2000-row corpus split 32 ways starves the Arrow kNN scorer's batches;

@@ -630,7 +630,7 @@ def googlesheets_shape(
     # CodegenFallback-adjacent. Byte-identical incl. NULL cohorts
     # (non-object message, absent message) — probed, and pinned by the
     # q97 oracle; measured 1.87 → 1.29 s on q97 at sf0.1
-    # (bench/ab_q97sheets_r12.json).
+    # (77849b4:bench/ab_q97sheets_r12.json).
     cells = rows.select(
         *[c for c in rows.columns if c != "_mv"],
         F.explode_outer(

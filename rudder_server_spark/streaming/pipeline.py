@@ -458,93 +458,34 @@ def transactional_warehouse_sink(out_dir: str):
 # message-id keys in BadgerDB with a ~30-day TTL and drops re-deliveries).
 # `dropDuplicatesWithinWatermark` (the F1 default above) bounds state by
 # EVENT-TIME watermark; the reference's keystore is bounded by WALL-CLOCK
-# TTL instead. transformWithStateInPandas expresses exactly that: one
-# value-state entry per dedup key with a TTL, RocksDB-backed at scale.
+# TTL instead. applyInPandasWithState with a processing-time timeout
+# expresses exactly that: one state entry per dedup key that expires at a
+# deadline set at insert, on any state store provider.
 
 
 def ttl_dedup_stream(
     stream: DataFrame,
     key_col: str = "message_id",
     ttl_ms: int = 30 * 24 * 3600 * 1000,
-    engine: str = "auto",
 ) -> DataFrame:
     """Drop rows whose dedup key has a live (non-expired) state entry —
     across micro-batches and within a batch (first occurrence wins).
 
-    Two equivalent physical forms, selected by ``engine``:
-
-    - ``"tws"``: transformWithStateInPandas with a native TTL value state
-      (requires the RocksDB state store provider — transformWithState is
-      built on its column-family support — and ``google.protobuf`` for
-      the Python state-server protocol).
-    - ``"applyinpandas"``: applyInPandasWithState with a processing-time
-      timeout; the state entry stores its insert-time DEADLINE and each
-      invocation re-arms the remaining duration, reproducing BadgerDB's
-      set-at-insert TTL (re-deliveries do NOT extend the TTL,
-      dedup.go:43-120) on the default state store with no extra deps.
-    - ``"auto"`` (default): tws when protobuf is importable, else the
-      applyInPandasWithState form — same semantics either way.
-
-    Closures/classes are defined inside this function so cloudpickle
-    ships them by value (workers don't need this package importable).
-    """
-    if engine == "auto":
-        try:
-            import google.protobuf  # noqa: F401
-
-            engine = "tws"
-        except ImportError:
-            engine = "applyinpandas"
-    if engine == "applyinpandas":
-        return _ttl_dedup_applyinpandas(stream, key_col, ttl_ms)
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = stream.schema
-
-    class _TtlDedup(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # one tiny entry per key; TTL evicts it after ttl_ms of
-            # wall-clock, after which the key dedups afresh — the BadgerDB
-            # keystore semantics (re-sends beyond the TTL re-deliver)
-            self._seen = handle.getValueState("seen", "seen byte", ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._seen.exists():
-                for _ in rows:
-                    pass
-                return
-            emitted = False
-            for pdf in rows:
-                if not emitted and len(pdf):
-                    yield pdf.iloc[[0]]
-                    emitted = True
-            if emitted:
-                self._seen.update((1,))
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_TtlDedup(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime",
-    )
-
-
-def _ttl_dedup_applyinpandas(
-    stream: DataFrame, key_col: str, ttl_ms: int
-) -> DataFrame:
-    """The protobuf-free TTL-dedup form (see ttl_dedup_stream).
-
     State per key = (deadline_epoch_ms,) stamped at FIRST insert; the
     processing-time timeout re-arms with the REMAINING time on every
     later invocation, so a re-delivery never extends the TTL (BadgerDB
-    SetWithTTL-at-insert semantics). On timeout the entry is removed and
-    the key dedups afresh.
+    SetWithTTL-at-insert semantics, dedup.go:43-120). On timeout the entry
+    is removed and the key dedups afresh.
+
+    The timeout makes Spark plan a no-data micro-batch on every trigger
+    (to fire expirations), so an ``availableNow`` query over this stream
+    never terminates, and ``processAllAvailable()`` never returns, unless
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` is false for that
+    run. A long-running ``processingTime`` query needs those batches to
+    evict expired keys.
+
+    The function is defined inside this one so cloudpickle ships it by
+    value (workers don't need this package importable).
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 

@@ -55,7 +55,7 @@ def test_warehouse_stream_dedup_and_fanout(spark, tmp_path):
     _write_events(src, events)
 
     q = run_warehouse_pipeline(spark, src, out, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     tracks = spark.read.parquet(os.path.join(out, "tracks"))
     assert tracks.count() == 10  # duplicates dropped by the watermark dedup
@@ -66,7 +66,7 @@ def test_warehouse_stream_dedup_and_fanout(spark, tmp_path):
 
     # restart with the same checkpoint + no new files → no duplicate appends
     q2 = run_warehouse_pipeline(spark, src, out, ckpt)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(os.path.join(out, "tracks")).count() == 10
 
     # second micro-batch through the SAME checkpoint: one new event + one
@@ -74,7 +74,7 @@ def test_warehouse_stream_dedup_and_fanout(spark, tmp_path):
     # new event lands (effectively-once across triggers, VERDICT r1 #9)
     _write_events(src, [_event(20), _event(21, dup_of=1)], fname="part-1.json")
     q3 = run_warehouse_pipeline(spark, src, out, ckpt)
-    q3.awaitTermination(120)
+    assert q3.awaitTermination(120)
     tracks3 = spark.read.parquet(os.path.join(out, "tracks"))
     assert tracks3.count() == 11
     assert tracks3.select("id").distinct().count() == 11
@@ -102,7 +102,7 @@ def test_router_retry_dlq(spark, tmp_path):
     q = run_router_pipeline(
         spark, src, out, ckpt, deliver, max_attempts=2, backoff_seconds=0
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # with backoff=0 retries drain on subsequent ticks; force any leftovers
     for _ in range(2):
         _drain(spark, out, deliver, max_attempts=2)
@@ -128,7 +128,7 @@ def test_router_transient_failure_recovers(spark, tmp_path):
     q = run_router_pipeline(
         spark, src, out, ckpt, deliver, max_attempts=3, backoff_seconds=0
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     for _ in range(2):
         _drain(spark, out, deliver, max_attempts=3)
 
@@ -158,7 +158,7 @@ def test_router_per_key_ordering(spark, tmp_path):
         return df.withColumn("delivered", F.lit(True))
 
     q = run_router_pipeline(spark, src, out, ckpt, deliver)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # collect() preserves partition-internal order; all rows share one user
     # → must arrive sorted by (received_at, message_id)
     assert seen == sorted(seen, key=lambda m: m)
@@ -196,7 +196,7 @@ def test_stateful_user_totals_across_batches(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     from pyspark.sql import Window
 
@@ -251,7 +251,7 @@ def test_streaming_session_windows(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_once()
     # batch 1 set the watermark to 11:00 (12:00 - 1h) but eviction uses the
@@ -313,7 +313,7 @@ def test_stream_interval_join_left_outer_flush(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_once()
     got1 = {(r["purchase_event_id"], r["click_event_id"])
@@ -366,7 +366,7 @@ def test_suppression_hot_reload_between_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     # batch 1: no list published yet -> everyone passes
     write_events("b0.json", [1, 2, 3])
@@ -382,11 +382,6 @@ def test_suppression_hot_reload_between_batches(spark, tmp_path):
 
 
 def test_ttl_dedup_stream_across_batches(spark, tmp_path):
-    # engine="auto": transformWithStateInPandas where google.protobuf
-    # exists (its Python state-server protocol needs it — any real
-    # cluster image ships it), else the applyInPandasWithState form with
-    # identical semantics — so this test runs EVERYWHERE, exercising
-    # whichever physical form the environment supports
     from rudder_server_spark.streaming.pipeline import ttl_dedup_stream
 
     src = str(tmp_path / "src")
@@ -403,10 +398,11 @@ def test_ttl_dedup_stream_across_batches(spark, tmp_path):
         {"message_id": "c", "value": 5.0},
     ], fname="b2.json")
 
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    # the TTL timeout plans a no-data micro-batch on every trigger, so an
+    # availableNow run only terminates with those batches off
+    nodata = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev_nodata = spark.conf.get(nodata)
+    spark.conf.set(nodata, "false")
     try:
         stream = (
             spark.readStream.schema("message_id string, value double")
@@ -423,9 +419,9 @@ def test_ttl_dedup_stream_across_batches(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(120)
     finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        spark.conf.set(nodata, prev_nodata)
 
     rows = {r["message_id"]: r["value"] for r in spark.read.parquet(out).collect()}
     # first occurrence wins in-batch (a -> 1.0); cross-batch re-delivery of
@@ -474,7 +470,7 @@ def test_anomaly_stream_flags_spike_hours(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run_once()
     run_once()  # second batch evicts with the first batch's watermark (13:00)
@@ -521,7 +517,7 @@ def test_streaming_index_constraints_match_batch_path(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _write_events(src, [merge_event(0, long_val), merge_event(1, "ok@x.io")])
     q = run_warehouse_pipeline(spark, src, out, ckpt, destination_type="BQ")
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     disc_s = spark.read.parquet(os.path.join(out, "rudder_discards")).collect()
     assert len(disc_s) == 1
@@ -563,5 +559,5 @@ def test_streaming_index_constraints_match_batch_path(spark, tmp_path):
     src2, out2, ckpt2 = (str(tmp_path / p) for p in ("src2", "out2", "ckpt2"))
     _write_events(src2, [merge_event(2, "a@x.io")])
     q2 = run_warehouse_pipeline(spark, src2, out2, ckpt2, destination_type="BQ")
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert not os.path.exists(os.path.join(out2, "rudder_discards"))
