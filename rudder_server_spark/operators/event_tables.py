@@ -94,6 +94,10 @@ ENVELOPE_COLS = (
     "rudder_id",
 )
 
+# rules-frame rows at or under which rudder_identity_mappings is built on
+# the driver (_mappings_driver_side); over it, connected_components runs
+MAPPINGS_DRIVER_ROWS = 2000
+
 _COMMON = [
     "user_id",
     "anonymous_id",
@@ -273,8 +277,8 @@ def _mappings_idents(r: DataFrame) -> DataFrame:
 
 
 def _mappings_driver_side(spark, rule_rows) -> DataFrame:
-    """The full mappings table from collected rule rows (caller-vouched
-    bounded micro-batch): Python union-find for the component labels plus
+    """The full mappings table from at most ``MAPPINGS_DRIVER_ROWS``
+    collected rule rows: Python union-find for the component labels plus
     the idents latest-received_at fold — semantics identical to
     ``_mappings_idents`` + the CC join-back (byte-identical labels: same
     union-find kernel, and UTF-8 byte order == code-point order so the
@@ -329,7 +333,6 @@ def event_table_fanout(
     normalized: bool = False,
     identity_rule_sources: tuple = ("merge",),
     max_event_tables: int = 10_000,
-    small_graph: bool = False,
 ) -> dict[str, DataFrame]:
     """Fan an envelope+payload event frame out into warehouse tables.
 
@@ -672,27 +675,22 @@ def event_table_fanout(
             F.col("merge_property_1_value").alias("src"),
             F.col("merge_property_2_value").alias("dst"),
         )
-        if small_graph:
-            # caller-vouched bounded batch (the streaming sink's
-            # micro-batches): the WHOLE mappings table assembles driver-
-            # side from ONE capped collect of the (already-checkpointed)
-            # rules frame — union-find labels AND the idents max-
-            # received_at fold both run in Python, so the only remaining
-            # Spark work is the tiny createDataFrame write. This removes
-            # the idents groupBy exchange + the edge-distinct job the r10
-            # shape still paid (BASELINE.md q18 decomposition: the
-            # mappings path was the sink's 0.7 s critical path). Output
-            # is byte-identical to the distributed join path (parity-
-            # pinned). Over the cap → distributed (the vouch was wrong).
-            capped = r.select(
-                "merge_property_1_type",
-                "merge_property_1_value",
-                "merge_property_2_type",
-                "merge_property_2_value",
-                "received_at",
-            ).limit(2001).collect()
-            if len(capped) <= 2000:
-                return _mappings_driver_side(df.sparkSession, capped)
+        # the rules frame's size picks the path: ONE capped collect of the
+        # (already-checkpointed) frame, and at or under the cap the WHOLE
+        # table assembles driver-side — union-find labels AND the idents
+        # max-received_at fold run in Python, so no idents exchange and no
+        # CC jobs run (BASELINE.md q18 decomposition). Output is byte-
+        # identical to the distributed join path (parity-pinned); a larger
+        # graph pays the capped collect and then takes that path.
+        capped = r.select(
+            "merge_property_1_type",
+            "merge_property_1_value",
+            "merge_property_2_type",
+            "merge_property_2_value",
+            "received_at",
+        ).limit(MAPPINGS_DRIVER_ROWS + 1).collect()
+        if len(capped) <= MAPPINGS_DRIVER_ROWS:
+            return _mappings_driver_side(df.sparkSession, capped)
         comps = connected_components(edges)
         idents = _mappings_idents(r)
         return idents.join(

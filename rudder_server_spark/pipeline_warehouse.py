@@ -40,7 +40,6 @@ def run_warehouse_upload(
     events: DataFrame,
     warehouse_dir: str,
     upload_id: str,
-    fanout_kwargs: dict | None = None,
     destination_type: str | None = None,
 ) -> dict:
     """Run one §3.2 upload: dedup → fan-out → per-table atomic MERGE.
@@ -69,7 +68,7 @@ def run_warehouse_upload(
         deduped = batch_dedup(
             events, record_id="record_id" if "record_id" in events.columns else None
         )
-        tables = event_table_fanout(deduped, **(fanout_kwargs or {}))
+        tables = event_table_fanout(deduped)
 
         def merge(name: str, df: DataFrame) -> bool:
             return load_commit.commit_merge(

@@ -144,17 +144,15 @@ def commit_merge(
 ) -> bool:
     """J6 delete+insert as an atomic version swap: merge the staging frame
     into the live snapshot (operators/load.merge_into semantics) and
-    publish the result under ``upload_id``. Idempotent per upload id."""
+    publish the result under ``upload_id``. Idempotent per upload id.
+    The write reads the live snapshot directly: ``refused`` guarantees
+    ``upload_id`` is not live, so ``_versions/<upload_id>`` is never the
+    directory being read."""
     from rudder_server_spark.operators.load import merge_into
 
     if refused(table_dir, upload_id):
         return False
-    existing = read_table(spark, table_dir)
-    merged = merge_into(existing, staging, pk, order_col)
-    if existing is not None:
-        # the merged plan reads the live snapshot lazily; materialize before
-        # the pointer swap so the write never races its own input version
-        merged = merged.localCheckpoint(eager=True)
+    merged = merge_into(read_table(spark, table_dir), staging, pk, order_col)
     return commit_overwrite(merged, table_dir, upload_id)
 
 

@@ -146,14 +146,7 @@ def warehouse_sink(
         batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        tables = event_table_fanout(
-            batch_df, materialize=True, schemas=schemas, promote=promote,
-            # micro-batches are bounded by the trigger: vouch the identity
-            # graph small so mappings resolves in one capped-collect job
-            # with a map-literal label attach (falls back to the normal
-            # distributed CC path if a batch exceeds the cap)
-            small_graph=True,
-        )
+        tables = event_table_fanout(batch_df, schemas=schemas, promote=promote)
         commit_tables(
             tables, lambda n, df: _write(df, os.path.join(out_dir, n)), destination_type
         )

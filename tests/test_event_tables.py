@@ -449,14 +449,15 @@ def test_fanout_event_table_cap_bounds_driver_discovery(spark):
     assert "tracks" in ok and len(set(ok)) >= n
 
 
-def test_mappings_small_graph_path_identical(spark):
-    """small_graph=True (the streaming sink's vouch) must produce the
-    byte-identical rudder_identity_mappings table through the one-job
-    capped-collect + map-literal path, including identifiers with quote
-    and backslash characters in the map-literal SQL."""
+def test_mappings_small_graph_path_identical(spark, monkeypatch):
+    """A graph under the row cap (the default here, 4 rules) builds the
+    rudder_identity_mappings table driver-side from one capped collect; it
+    must equal the distributed connected_components join path, forced by
+    a cap of 0, including identifiers with quote and backslash
+    characters."""
     import json
 
-    from rudder_server_spark.operators.event_tables import event_table_fanout
+    from rudder_server_spark.operators import event_tables
 
     def merge_evt(i, a, b):
         return (
@@ -495,8 +496,14 @@ def test_mappings_small_graph_path_identical(spark):
         }),
     ))
     df = spark.createDataFrame(rows, schema)
-    base = event_table_fanout(df)["rudder_identity_mappings"]
-    fast = event_table_fanout(df, small_graph=True)["rudder_identity_mappings"]
+    fast = event_table_fanout(df)["rudder_identity_mappings"]
+    with monkeypatch.context() as m:
+        m.setattr(event_tables, "MAPPINGS_DRIVER_ROWS", 0)
+        base = event_table_fanout(df)["rudder_identity_mappings"]
+    # the driver path is a local frame; only the distributed path joins
+    # the idents aggregate to the component labels
+    plan = lambda d: d._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    assert "Join" not in plan(fast) and "Join" in plan(base)
     key = lambda r: (r["merge_property_type"], r["merge_property_value"])  # noqa: E731
     b = {key(r): (r["rudder_id"], r["updated_at"]) for r in base.collect()}
     f = {key(r): (r["rudder_id"], r["updated_at"]) for r in fast.collect()}

@@ -60,6 +60,62 @@ def test_commit_merge_delete_insert(spark, tmp_path):
     assert read_table(spark, t).count() == 3
 
 
+def test_commit_merge_into_live_table_persists_nothing(spark, tmp_path):
+    """A MERGE into a live table is a read and a write: it leaves no
+    persisted RDD (a checkpoint would hold a copy of the whole merged
+    table in block storage until JVM GC)."""
+    t = str(tmp_path / "users")
+    schema = "id string, received_at string, val string"
+    base = spark.createDataFrame([("a", "2024-01-01", "v1")], schema)
+    assert commit_merge(spark, base, t, "up-1") is True
+    sc = spark.sparkContext
+
+    def stored():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = stored()
+    staging = spark.createDataFrame([("b", "2024-02-01", "v1")], schema)
+    assert commit_merge(spark, staging, t, "up-2") is True
+    assert stored() - before == set()
+    assert read_table(spark, t).count() == 2
+
+
+def test_commit_merge_crash_mid_write_keeps_live_version(spark, tmp_path):
+    """A MERGE whose write fails part-way raises, leaves the previous
+    version live and the upload id uncommitted; a retry of the same id
+    with good staging then commits."""
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    from rudder_server_spark.sources.load_commit import committed_ids
+
+    t = str(tmp_path / "users")
+    schema = "id string, received_at string, val string"
+    base = spark.createDataFrame(
+        [("a", "2024-01-01", "v1"), ("b", "2024-01-01", "v1")], schema
+    )
+    assert commit_merge(spark, base, t, "up-1") is True
+    good = spark.createDataFrame(
+        [("a", "2024-02-01", "v2"), ("c", "2024-02-01", "v1")], schema
+    )
+    bad = good.withColumn(
+        "val",
+        F.when(F.col("id") == "c", F.raise_error(F.lit("crash mid-merge")))
+        .otherwise(F.col("val")),
+    )
+    with pytest.raises(SparkRuntimeException, match="crash mid-merge"):
+        commit_merge(spark, bad, t, "up-2")
+    assert current_version(t) == "up-1"
+    assert "up-2" not in committed_ids(t)
+    rows = {r["id"]: r["val"] for r in read_table(spark, t).collect()}
+    assert rows == {"a": "v1", "b": "v1"}
+
+    assert commit_merge(spark, good, t, "up-2") is True
+    assert current_version(t) == "up-2"
+    rows = {r["id"]: r["val"] for r in read_table(spark, t).collect()}
+    assert rows == {"a": "v2", "b": "v1", "c": "v1"}
+
+
 def test_vacuum_keeps_live(spark, tmp_path):
     t = str(tmp_path / "t")
     for i in range(4):
