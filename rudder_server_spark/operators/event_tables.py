@@ -122,9 +122,7 @@ def _strip_prefix(name: str, prefix: str) -> str:
     return name[len(prefix) :] if name.startswith(prefix) else name
 
 
-def discover_fanout_schemas(
-    df: DataFrame, payload_col: str = "payload", discovery_limit: int | None = 200_000
-) -> dict:
+def discover_fanout_schemas(df: DataFrame, payload_col: str = "payload") -> dict:
     """The fan-out's per-table schema consolidation (one scan — see
     event_table_fanout). Cacheable by the caller: schemas evolve with the
     corpus, not per query, so engines persist them (the reference's
@@ -143,7 +141,6 @@ def discover_fanout_schemas(
             ("group_traits", "traits", et == "group"),
         ],
         payload_col,
-        discovery_limit=discovery_limit,
     )
 
 
@@ -326,12 +323,10 @@ def _mappings_driver_side(spark, rule_rows) -> DataFrame:
 def event_table_fanout(
     df: DataFrame,
     payload_col: str = "payload",
-    discovery_limit: int | None = 200_000,
     materialize: bool = True,
     schemas: dict | None = None,
     promote: set | None = None,
     normalized: bool = False,
-    identity_rule_sources: tuple = ("merge",),
     max_event_tables: int = 10_000,
 ) -> dict[str, DataFrame]:
     """Fan an envelope+payload event frame out into warehouse tables.
@@ -356,9 +351,7 @@ def event_table_fanout(
     # event types; properties/userProperties consolidate over track rows,
     # page properties over page rows, traits over identify rows — all five
     # aliases discovered in ONE scan/parse via filtered aggregates.
-    per_alias = schemas if schemas is not None else discover_fanout_schemas(
-        env, payload_col, discovery_limit
-    )
+    per_alias = schemas if schemas is not None else discover_fanout_schemas(env, payload_col)
     ctx_schema = per_alias["ctx"]
     track_schema = list(per_alias["track_props"]) + list(per_alias["track_uprops"])
     page_schema = per_alias["page_props"]
@@ -373,15 +366,15 @@ def event_table_fanout(
     seen = {name for name, _, _ in schema}
 
     # timestamp-promotion verdicts are corpus-level state, like the schema:
-    # decided ONCE over the merged schema, on first use (it costs a sampling
-    # job). Leaving promote=None down in flatten_events would make every
-    # flat_for call re-run discover_promotions — and could even reach
-    # different verdicts per sub-schema sample.
+    # decided ONCE over the merged schema, on first use (it costs a Spark
+    # job over the whole batch). Leaving promote=None down in flatten_events
+    # would make every flat_for call re-run discover_promotions, one job per
+    # table.
     _promote: list = [promote]
 
     def get_promote() -> set:
         if _promote[0] is None:
-            _promote[0] = discover_promotions(env, schema, payload_col, discovery_limit)
+            _promote[0] = discover_promotions(env, schema, payload_col)
         return _promote[0]
 
     if materialize:
@@ -650,17 +643,15 @@ def event_table_fanout(
     _rules: list = []
 
     def rules() -> DataFrame:
-        # default sources=("merge",): the explicit-rule subset (the other
-        # sources are a config toggle in the reference — enableIDResolution
-        # plus per-destination IsIdentityEnabled, idresolution.go:15-21).
+        # sources=("merge",): the explicit-rule subset (the other sources
+        # are a config toggle in the reference — enableIDResolution plus
+        # per-destination IsIdentityEnabled, idresolution.go:15-21).
         # Lazy-checkpointed: three consumers share it (the merge_rules
         # table, the CC edge set, and the mappings idents aggregate), and
         # without the checkpoint each re-runs the merge-payload JSON parse.
         if not _rules:
             _rules.append(
-                identity_merge_rules(
-                    env, payload_col, identity_rule_sources
-                ).localCheckpoint(eager=False)
+                identity_merge_rules(env, payload_col, ("merge",)).localCheckpoint(eager=False)
             )
         return _rules[0]
 

@@ -36,16 +36,21 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from rudder_server_spark.functions.names import safe_column_name
 
 DEFAULT_GROUPS = ("context", "properties", "traits", "userProperties")
+# flattening stops at this nesting level (set.go recursion limit); deeper
+# objects land as one JSON string column
+MAX_DEPTH = 3
+# subtrees that may collapse as string-like objects (set.go:64-82)
+STRING_LIKE_PATHS = ("context.traits",)
 
 # RFC3339-ish timestamp detector (datatype.go:15-17 semantics)
 TS_REGEX = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}(\.\d+)?(Z|[+-]\d{2}:?\d{2})?$"
 
 
-def _leaf_paths(schema: T.DataType, prefix: list[str], depth: int, max_depth: int):
+def _leaf_paths(schema: T.DataType, prefix: list[str], depth: int):
     """Walk a merged variant OBJECT schema → (json_path_parts, spark_type)."""
-    if isinstance(schema, T.StructType) and depth < max_depth:
+    if isinstance(schema, T.StructType) and depth < MAX_DEPTH:
         for f in schema.fields:
-            yield from _leaf_paths(f.dataType, prefix + [f.name], depth + 1, max_depth)
+            yield from _leaf_paths(f.dataType, prefix + [f.name], depth + 1)
     else:
         yield prefix, schema
 
@@ -70,41 +75,23 @@ def _target_type(dt: T.DataType) -> str | None:
 
 
 def discover_flat_schema(
-    df: DataFrame,
-    payload_col: str = "payload",
-    groups=DEFAULT_GROUPS,
-    max_depth: int = 3,
-    discovery_limit: int | None = None,
-    group_filters: dict | None = None,
+    df: DataFrame, payload_col: str = "payload"
 ) -> list[tuple[str, list[str], str]]:
     """Phase 1: returns [(column_name, json_path_parts, target_type), ...].
 
     column_name is the snake_cased, safety-filtered flattened name
-    (group prefix + '_'-joined path).
-
-    discovery_limit bounds the schema scan to the first N events — the same
-    incremental, order-dependent consolidation the reference applies
-    (first-type-wins per staging batch, warehouse/schema/schema.go:294-343);
-    a full-corpus exact pass (None) is never what runs at 100 TB.
-
-    group_filters maps a group name to a boolean Column restricting which
-    rows contribute to that group's schema (per-event-type consolidation,
-    P8) — all groups still share ONE scan and ONE JSON parse.
+    (group prefix + '_'-joined path). Every event of ``df`` contributes, as
+    the reference consolidates a whole staging batch
+    (warehouse/schema/schema.go:294-343).
     """
-    specs = [(g, g, (group_filters or {}).get(g)) for g in groups]
-    per_alias = discover_group_schemas(df, specs, payload_col, max_depth, discovery_limit)
-    out: list[tuple[str, list[str], str]] = []
-    for g in groups:
-        out.extend(per_alias[g])
-    return sorted(out)
+    per_alias = discover_group_schemas(df, [(g, g, None) for g in DEFAULT_GROUPS], payload_col)
+    return sorted(e for g in DEFAULT_GROUPS for e in per_alias[g])
 
 
 def discover_group_schemas(
     df: DataFrame,
     specs: list[tuple],
     payload_col: str = "payload",
-    max_depth: int = 3,
-    discovery_limit: int | None = None,
 ) -> dict[str, list[tuple[str, list[str], str]]]:
     """One-pass, multi-alias schema discovery.
 
@@ -114,19 +101,12 @@ def discover_group_schemas(
     one wide ``schema_of_variant_agg`` aggregate; returns
     ``{alias: [(column_name, path_parts, target_type), ...]}``.
     """
-    scan = df
-    if discovery_limit:
-        n = df.count()  # parquet metadata count — no data scan
-        if n > discovery_limit:
-            # seeded sample keeps discovery parallel (a limit() would collapse
-            # the scan to one partition) and deterministic
-            scan = df.sample(fraction=discovery_limit / n, seed=42)
     filter_cols = sorted(
-        {c for _, _, cond in specs if cond is not None for c in scan.columns if c != payload_col}
+        {c for _, _, cond in specs if cond is not None for c in df.columns if c != payload_col}
     )
     # parse each payload ONCE into a variant column, then aggregate — with
     # parse_json inlined per alias the payload would be re-parsed per spec
-    parsed = scan.select(
+    parsed = df.select(
         F.parse_json(F.col(payload_col)).alias("_v"), *[F.col(c) for c in filter_cols]
     )
 
@@ -149,7 +129,7 @@ def discover_group_schemas(
             except Exception:
                 parsed_t = None
             if isinstance(parsed_t, T.StructType):
-                for path, dt in _leaf_paths(parsed_t, [key], 1, max_depth):
+                for path, dt in _leaf_paths(parsed_t, [key], 1):
                     tgt = _target_type(dt)
                     if tgt is None:
                         continue
@@ -162,15 +142,15 @@ def discover_promotions(
     df: DataFrame,
     schema: list[tuple[str, list[str], str]],
     payload_col: str = "payload",
-    discovery_limit: int | None = 200_000,
 ) -> set:
     """Decide which discovered string columns promote to timestamp.
 
-    Sampled column-level vote (datatype.go:15-17 decides per value at load;
-    a bounded-sample vote + try_cast for stragglers matches that without a
-    full-corpus pass). Like the schema itself, the result is a property of
-    the CORPUS, not of a query — persist it alongside the schema registry
-    entry instead of re-sampling per read.
+    Column-level vote over every event of ``df``: a string column promotes
+    when each of its non-null values has the RFC3339 shape
+    (datatype.go:15-17 decides per value at load; the projection's
+    try_cast nulls any later straggler). Like the schema itself, the result
+    is a property of the CORPUS, not of a query — persist it alongside the
+    schema registry entry instead of re-deriving it per read.
     """
     str_entries = [(n, p) for n, p, tgt in schema if tgt == "string"]
     if not str_entries:
@@ -190,15 +170,10 @@ def discover_promotions(
             ]
         )
 
-    scan = df
-    if discovery_limit:
-        n = df.count()
-        if n > discovery_limit:
-            scan = df.sample(fraction=discovery_limit / n, seed=42)
-    sample_flat = scan.select(
+    flat = df.select(
         F.from_json(F.col(payload_col), to_struct(root)).alias("_s")
     ).select(*[F.col("_s." + ".".join(p)).alias(n) for n, p in str_entries])
-    checks = sample_flat.agg(
+    checks = flat.agg(
         *[
             F.min(F.when(F.col(c).isNotNull(), F.col(c).rlike(TS_REGEX))).alias(c)
             for c, _ in str_entries
@@ -207,14 +182,12 @@ def discover_promotions(
     return {c for c, _ in str_entries if checks[c] is True}
 
 
-def _string_like_subtrees(
-    scalar: list[tuple[str, list[str], str]], string_like: tuple
-) -> dict[tuple, list]:
+def _string_like_subtrees(scalar: list[tuple[str, list[str], str]]) -> dict[tuple, list]:
     """Subtrees of ``scalar`` entries that CAN collapse as string-like
     objects (set.go:30-31): every direct leaf is a digit-named string.
     Returns {path_parts: [entries sorted by index]}."""
     strlike: dict[tuple, list] = {}
-    for sl in string_like:
+    for sl in STRING_LIKE_PATHS:
         parts = tuple(sl.split("."))
         subtree = [
             (n, p, t)
@@ -226,9 +199,7 @@ def _string_like_subtrees(
     return strlike
 
 
-def string_like_collapsed(
-    schema: list[tuple[str, list[str], str]], string_like: tuple = ("context.traits",)
-) -> dict[str, tuple]:
+def string_like_collapsed(schema: list[tuple[str, list[str], str]]) -> dict[str, tuple]:
     """Names of the columns :func:`flatten_events` will synthesize from
     string-like subtrees of ``schema`` — {collapsed_column_name: path_parts}.
     Callers projecting flatten_events output (the P8 fan-out) use this to
@@ -236,7 +207,7 @@ def string_like_collapsed(
     scalar = [(n, p, t) for n, p, t in schema if t != "json"]
     return {
         safe_column_name("_".join(parts)): parts
-        for parts in _string_like_subtrees(scalar, string_like)
+        for parts in _string_like_subtrees(scalar)
     }
 
 
@@ -244,26 +215,24 @@ def flatten_events(
     df: DataFrame,
     payload_col: str = "payload",
     keep_cols: tuple = ("message_id",),
-    groups=DEFAULT_GROUPS,
-    max_depth: int = 3,
-    detect_timestamps: bool = True,
-    discovery_limit: int | None = 200_000,
     schema: list[tuple[str, list[str], str]] | None = None,
     json_paths: tuple = (),
     promote: set | None = None,
-    string_like: tuple = ("context.traits",),
 ) -> DataFrame:
     """Phase 2: project the discovered schema into flattened typed columns.
 
     The projection parses the payload exactly ONCE with `from_json` against
     the discovered nested schema (a single JSON walk per row), then selects
     struct fields — benched ~3× faster than per-column variant path-gets at
-    1M rows. Leaves typed `json` (objects past max_depth, arrays) fall back
+    1M rows. Leaves typed `json` (objects past MAX_DEPTH, arrays) fall back
     to a variant extraction serialized with to_json.
 
-    Pass a precomputed ``schema`` (from :func:`discover_flat_schema`) to
-    skip the discovery pass — e.g. when one discovery feeds several
-    projections (the P8 fan-out).
+    Left None, ``schema`` and ``promote`` are discovered from every event
+    of ``df`` (:func:`discover_flat_schema`, :func:`discover_promotions`).
+    Pass a precomputed ``schema`` to skip the discovery pass — e.g. when
+    one discovery feeds several projections (the P8 fan-out) — and a
+    precomputed ``promote`` set (``set()`` promotes nothing) to skip the
+    promotion pass.
 
     ``json_paths`` lists dotted paths (e.g. ``"properties.items"``) whose
     subtree must stay a JSON string instead of flattening — the reference's
@@ -271,7 +240,7 @@ def flatten_events(
     customer declares as opaque JSON documents.
     """
     if schema is None:
-        schema = discover_flat_schema(df, payload_col, groups, max_depth, discovery_limit)
+        schema = discover_flat_schema(df, payload_col)
     if json_paths:
         forced = [tuple(p.split(".")) for p in json_paths]
 
@@ -285,8 +254,6 @@ def flatten_events(
                 collapsed[tuple(path)] = (name, path, tgt)
             else:
                 # collapse every leaf below a forced path to ONE json column
-                from rudder_server_spark.functions.names import safe_column_name
-
                 collapsed[hit] = (safe_column_name("_".join(hit)), list(hit), "json")
         schema = sorted(collapsed.values())
 
@@ -319,14 +286,7 @@ def flatten_events(
     staged = df.select(*staged_cols)
 
     if promote is None:
-        # timestamp promotion decided on the same bounded sample as schema
-        # discovery; pass a precomputed ``promote`` set (schema registry) to
-        # skip this sampling pass entirely
-        promote = (
-            discover_promotions(df, schema, payload_col, discovery_limit)
-            if detect_timestamps
-            else set()
-        )
+        promote = discover_promotions(df, schema, payload_col)
 
     # "string-like objects" (set.go:30-31, stringlikeobject.go): an object
     # whose keys are consecutive non-negative integers starting at 0 or 1 and
@@ -337,14 +297,12 @@ def flatten_events(
     # leaves) and a row-level predicate decides per row, vectorized:
     # qualifying rows collapse, non-qualifying rows keep indexed columns.
     # Scope matches the reference: context.traits only (set.go:64-82).
-    strlike = _string_like_subtrees(scalar, string_like)
+    strlike = _string_like_subtrees(scalar)
 
     strlike_names = {n for entries in strlike.values() for n, _, _ in entries}
     strlike_quals: dict[str, object] = {}
     collapsed_cols: list = []
     for parts, entries in strlike.items():
-        from rudder_server_spark.functions.names import safe_column_name
-
         pairs = F.array(
             *[
                 F.struct(

@@ -85,7 +85,7 @@ def get_spark(
     host = host_settings()
     cpus = host["cpus"]
     master = master or f"local[{cpus}]"
-    shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+    shuffle = str(shuffle_partitions or cpus)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -112,26 +112,17 @@ def get_spark(
         # table on 1-3 tasks while 29+ cores idle). On a real cluster the
         # deployment overrides this back up: with TB-scale inputs the
         # default split size already yields far more tasks than cores.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(1024 * 1024)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(_MiB))
         .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-        # POST-SHUFFLE parallelism is a TRADEOFF, so only an env knob: a
-        # small advisory size keeps expression-heavy audit stages wide
-        # (AQE optimizes for shuffle bytes, blind to per-row cost), but it
-        # also un-coalesces the many tiny exchanges of iterative/join
-        # queries into full-width stages — measured 2-4x SLOWER on
-        # q9/t56/q1 when globally forced to 1 MB, outweighing the 1.4-2x
-        # audit-query win. Default stays Spark's; per-run override via
-        # SPARK_GRAFT_ADVISORY_PARTITION_BYTES when a workload is known
-        # to be expression-bound.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get(
-                "SPARK_GRAFT_ADVISORY_PARTITION_BYTES", str(64 * 1024 * 1024)
-            ),
-        )
+        # POST-SHUFFLE parallelism is a TRADEOFF: a small advisory size
+        # keeps expression-heavy audit stages wide (AQE optimizes for
+        # shuffle bytes, blind to per-row cost), but it also un-coalesces
+        # the many tiny exchanges of iterative/join queries into full-width
+        # stages — measured 2-4x SLOWER on q9/t56/q1 when globally forced
+        # to 1 MB, outweighing the 1.4-2x audit-query win. So Spark's
+        # default stays; a workload known to be expression-bound overrides
+        # it through ``extra_conf``.
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * _MiB))
         # whole-stage codegen emits one generated class per stage; across
         # ~50 distinct query plans the JVM's default 240 MB code cache fills
         # and the JIT silently stops compiling — later queries then run

@@ -124,7 +124,7 @@ def warehouse_sink(
     schema registry (wh_schemas, warehouse/schema/schema.go:205-343): the
     reference fetches the warehouse schema once and reuses it per upload
     rather than re-deriving from every staging batch — passing them skips
-    the per-micro-batch discovery + promotion-sampling jobs. Left None,
+    the per-micro-batch discovery + promotion jobs. Left None,
     each batch discovers its own (first-batch bootstrap).
 
     The tables go through the batch upload's ``commit_tables``, so

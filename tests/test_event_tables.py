@@ -91,7 +91,7 @@ def test_message_id_sanitize(spark):
 
 
 def test_fanout_tables(spark):
-    tables = event_table_fanout(_mk_events(spark), discovery_limit=None)
+    tables = event_table_fanout(_mk_events(spark))
     assert set(tables) == {
         "tracks", "order_completed", "identifies", "users", "pages", "screens",
         "groups", "aliases", "rudder_identity_merge_rules",
@@ -153,7 +153,7 @@ def test_users_latest_nonnull_traits(spark):
         "event_name string, received_at timestamp, sent_at timestamp, "
         "original_timestamp timestamp, payload string",
     )
-    u = event_table_fanout(df, discovery_limit=None)["users"].head()
+    u = event_table_fanout(df)["users"].head()
     assert u["name"] == "N"          # latest non-null
     assert u["email"] == "old@x.com" # null skipped, falls back to earlier
     assert u["received_at"] == T0 + dt.timedelta(60)
@@ -171,8 +171,7 @@ def test_flatten_json_paths_config(spark):
     ]
     df = spark.createDataFrame(rows, "idx long, payload string")
     flat = flatten_events(
-        df, keep_cols=("idx",), detect_timestamps=False, discovery_limit=None,
-        json_paths=("properties.items",),
+        df, keep_cols=("idx",), promote=set(), json_paths=("properties.items",),
     )
     assert "properties_items" in flat.columns
     assert "properties_items_a" not in flat.columns
@@ -199,7 +198,7 @@ def test_string_like_object_collapse(spark):
         ("m3", '{"properties":{"0":"x","1":"y"}}'),
     ]
     df = spark.createDataFrame(rows, "message_id string, payload string")
-    flat = flatten_events(df, keep_cols=("message_id",), detect_timestamps=False)
+    flat = flatten_events(df, keep_cols=("message_id",), promote=set())
     got = {r["message_id"]: r.asDict() for r in flat.collect()}
     assert got["m1"]["context_traits"] == "abc"
     assert got["m1"]["context_traits_0"] is None
@@ -231,7 +230,7 @@ def test_screens_and_groups_tables(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df, discovery_limit=None)
+    tables = event_table_fanout(df)
     screens = tables["screens"].collect()
     assert len(screens) == 1
     s = screens[0].asDict()
@@ -268,7 +267,7 @@ def test_fanout_carries_collapsed_string_like_traits(spark):
         " original_timestamp timestamp, payload string",
     )
     for materialize in (True, False):
-        tables = event_table_fanout(df, discovery_limit=None, materialize=materialize)
+        tables = event_table_fanout(df, materialize=materialize)
         got = {r["id"]: r.asDict() for r in tables["tracks"].collect()}
         assert got["m1"]["context_traits"] == "hi", materialize
         assert got["m2"]["context_traits"] == "xyz", materialize
@@ -297,7 +296,7 @@ def test_fanout_colliding_event_names_union(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df, discovery_limit=None)
+    tables = event_table_fanout(df)
     oc = tables["order_completed"].collect()
     assert {r["id"] for r in oc} == {"m1", "m2", "m3"}
 
@@ -332,7 +331,7 @@ def test_extract_fanout_recordid_keyed(spark):
         " event_name string, record_id string, received_at timestamp,"
         " sent_at timestamp, original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df, discovery_limit=None)
+    tables = event_table_fanout(df)
     assert "product_export" in set(tables)
     pe = {r["id"]: r.asDict() for r in tables["product_export"].collect()}
     # delete+insert: one row per record_id, latest received_at wins
@@ -441,11 +440,11 @@ def test_fanout_event_table_cap_bounds_driver_discovery(spark):
         F.lit(T0).cast("timestamp").alias("original_timestamp"),
         F.lit('{"type":"track","properties":{"x":1}}').alias("payload"),
     )
-    tables = event_table_fanout(rows, discovery_limit=1000, max_event_tables=50)
+    tables = event_table_fanout(rows, max_event_tables=50)
     with pytest.raises(ValueError, match="max_event_tables"):
         set(tables)  # iteration triggers the deferred per-event discovery
     # a sane cap admits the same frame (the fixed tables are unaffected)
-    ok = event_table_fanout(rows, discovery_limit=1000, max_event_tables=n + 10)
+    ok = event_table_fanout(rows, max_event_tables=n + 10)
     assert "tracks" in ok and len(set(ok)) >= n
 
 
@@ -510,3 +509,37 @@ def test_mappings_small_graph_path_identical(spark, monkeypatch):
     assert b == f and len(b) == 7
     # the duplicate rule's later received_at won the idents fold
     assert f[("email", "a@x.io")][1] == T0 + dt.timedelta(hours=3)
+
+
+def test_discovery_reads_whole_batch(spark, monkeypatch):
+    """Schema and timestamp-promotion discovery read every event of the
+    batch, as the reference consolidates a whole staging batch
+    (warehouse/schema/schema.go:294-343), and run no count pass: 30 context
+    keys that each occur in ONE event of a 300k-event batch are all
+    discovered and all promoted to timestamp."""
+    from rudder_server_spark.operators.event_tables import (
+        discover_fanout_schemas,
+        fanout_flat_schema,
+    )
+    from rudder_server_spark.operators.flatten import discover_promotions
+
+    # event 10_000*k + 7 alone carries context key r<k>, k in 0..29
+    k = (F.col("id") / 10_000).cast("int")
+    payload = F.when(
+        F.col("id") % 10_000 == 7,
+        F.format_string('{"type":"track","context":{"r%d":"2024-02-01T00:00:%02dZ"}}', k, k),
+    ).otherwise(F.lit('{"type":"track","context":{"ip":"10.0.0.1"}}'))
+    rows = spark.range(300_000, numPartitions=2).select(
+        F.format_string("msg-%06d", "id").alias("message_id"),
+        F.lit("track").alias("event_type"),
+        payload.alias("payload"),
+    )
+
+    def no_count(self):
+        raise AssertionError("discovery must not count the batch")
+
+    monkeypatch.setattr(type(rows), "count", no_count)
+    per_alias = discover_fanout_schemas(rows)
+    rare_cols = {f"context_r{i}" for i in range(30)}
+    assert rare_cols <= {name for name, _, _ in per_alias["ctx"]}
+    assert rare_cols <= discover_promotions(rows, fanout_flat_schema(per_alias))

@@ -87,9 +87,7 @@ def test_flatten_lossless(spark, data):
         [(i, json.dumps({"properties": r})) for i, r in enumerate(rows)],
         "idx long, payload string",
     )
-    flat = flatten_events(
-        df, keep_cols=("idx",), detect_timestamps=False, discovery_limit=None
-    ).collect()
+    flat = flatten_events(df, keep_cols=("idx",), promote=set()).collect()
     by_idx = {r["idx"]: r for r in flat}
     expected = _expected_cols(schema)
     for i, props in enumerate(rows):

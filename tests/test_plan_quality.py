@@ -92,7 +92,7 @@ def test_flatten_single_json_parse(spark):
     from rudder_server_spark.sources.rudder_events import rudder_events_path
 
     df = spark.read.parquet(rudder_events_path(SF_DIR))
-    flat = flatten_events(df, detect_timestamps=False)
+    flat = flatten_events(df, promote=set())
     opt = _optimized(flat)
     assert opt.count("from_json") == 1, opt
 
