@@ -120,9 +120,10 @@ def get_spark(
         # the many tiny exchanges of iterative/join queries into full-width
         # stages — measured 2-4x SLOWER on q9/t56/q1 when globally forced
         # to 1 MB, outweighing the 1.4-2x audit-query win. So Spark's
-        # default stays; a workload known to be expression-bound overrides
-        # it through ``extra_conf``.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(64 * _MiB))
+        # default (64 MiB) stays unset here; a workload known to be
+        # expression-bound sets spark.sql.adaptive.advisoryPartitionSizeInBytes
+        # through ``extra_conf``.
+
         # whole-stage codegen emits one generated class per stage; across
         # ~50 distinct query plans the JVM's default 240 MB code cache fills
         # and the JIT silently stops compiling — later queries then run

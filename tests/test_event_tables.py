@@ -515,7 +515,7 @@ def test_discovery_reads_whole_batch(spark, monkeypatch):
     """Schema and timestamp-promotion discovery read every event of the
     batch, as the reference consolidates a whole staging batch
     (warehouse/schema/schema.go:294-343), and run no count pass: 30 context
-    keys that each occur in ONE event of a 300k-event batch are all
+    keys that each occur in ONE event of the batch are all
     discovered and all promoted to timestamp."""
     from rudder_server_spark.operators.event_tables import (
         discover_fanout_schemas,
@@ -523,13 +523,13 @@ def test_discovery_reads_whole_batch(spark, monkeypatch):
     )
     from rudder_server_spark.operators.flatten import discover_promotions
 
-    # event 10_000*k + 7 alone carries context key r<k>, k in 0..29
-    k = (F.col("id") / 10_000).cast("int")
+    # event 100*k + 7 alone carries context key r<k>, k in 0..29
+    k = (F.col("id") / 100).cast("int")
     payload = F.when(
-        F.col("id") % 10_000 == 7,
+        F.col("id") % 100 == 7,
         F.format_string('{"type":"track","context":{"r%d":"2024-02-01T00:00:%02dZ"}}', k, k),
     ).otherwise(F.lit('{"type":"track","context":{"ip":"10.0.0.1"}}'))
-    rows = spark.range(300_000, numPartitions=2).select(
+    rows = spark.range(3_000, numPartitions=2).select(
         F.format_string("msg-%06d", "id").alias("message_id"),
         F.lit("track").alias("event_type"),
         payload.alias("payload"),
