@@ -13,12 +13,15 @@ shapes in FIXTURES.md §3):
 - ``extract``  → one ``<snake_cased_event>`` table keyed by record_id
                  (retl record stream; events.go:166-243, ExtractRules)
 
-Spark-first shape: ONE schema discovery + ONE ``from_json`` parse over the
-corpus (shared via lazy localCheckpoint), then each output table is a
-filter + narrow projection of that parsed frame — per-type parquet row-group
-pruning upstream, no per-table JSON re-parse. The per-event-name table set
-is driver-side metadata (bounded by schema cardinality, same as the
-reference's physical table-per-event design).
+Spark-first shape: ONE schema discovery and ONE promotion vote over the
+batch, then each output table is a filter + a ``from_json`` projection of
+only its own fields (a per-table sub-schema, so the parser skips every
+other key). The fan-out materializes nothing itself: a caller that writes
+every table (``run_warehouse_upload``, the streaming ``warehouse_sink``)
+hands it a batch it has already materialized once, so each table reads
+those blocks instead of re-running the staging scan and dedup. The
+per-event-name table set is driver-side metadata (bounded by schema
+cardinality, same as the reference's physical table-per-event design).
 """
 
 from __future__ import annotations
@@ -323,7 +326,6 @@ def _mappings_driver_side(spark, rule_rows) -> DataFrame:
 def event_table_fanout(
     df: DataFrame,
     payload_col: str = "payload",
-    materialize: bool = True,
     schemas: dict | None = None,
     promote: set | None = None,
     normalized: bool = False,
@@ -336,6 +338,8 @@ def event_table_fanout(
     event_type, event_name, received_at, sent_at, original_timestamp) and a
     JSON ``payload`` column. Pass ``schemas`` (from
     :func:`discover_fanout_schemas`) to reuse a cached consolidation.
+    Every table's plan reads ``df`` again, so a caller that writes many
+    tables materializes ``df`` first (a ``localCheckpoint``).
 
     ``normalized=True`` declares the input already envelope-normalized
     (P2-P4 applied) and skips re-stamping. This matters when the caller has
@@ -366,48 +370,25 @@ def event_table_fanout(
     seen = {name for name, _, _ in schema}
 
     # timestamp-promotion verdicts are corpus-level state, like the schema:
-    # decided ONCE over the merged schema, on first use (it costs a Spark
-    # job over the whole batch). Leaving promote=None down in flatten_events
-    # would make every flat_for call re-run discover_promotions, one job per
-    # table.
-    _promote: list = [promote]
+    # decided ONCE over the merged schema, here (one Spark job over the
+    # batch). Leaving promote=None down in flatten_events would make every
+    # flat_for call re-run discover_promotions, one job per table.
+    if promote is None:
+        promote = discover_promotions(env, schema, payload_col)
 
-    def get_promote() -> set:
-        if _promote[0] is None:
-            _promote[0] = discover_promotions(env, schema, payload_col)
-        return _promote[0]
-
-    if materialize:
-        # every output table filters this one parsed frame; materialize it
-        # once instead of re-parsing JSON per table. Built on first use —
-        # the full-schema expression tree costs real driver/Catalyst time,
-        # and callers touching one table shouldn't pay it eagerly.
-        _flat_full: list = []
-
-        def flat_for(names) -> DataFrame:
-            if not _flat_full:
-                _flat_full.append(
-                    flatten_events(
-                        env, payload_col=payload_col, keep_cols=tuple(keep),
-                        schema=schema, promote=get_promote(),
-                    ).localCheckpoint(eager=False)
-                )
-            return _flat_full[0]
-
-    else:
-        # lazy path: each table parses ONLY its own fields. Catalyst cannot
-        # prune the shared from_json for us — the parsed struct is referenced
-        # once per leaf column, so CollapseProject refuses to inline the
-        # expensive parse and the full schema would be decoded for every
-        # table. Hand the projection a per-table sub-schema instead; at
-        # 100 TB this is the difference between decoding every JSON key of
-        # every event and decoding the 5 context keys `tracks` needs.
-        def flat_for(names) -> DataFrame:
-            sub = [e for e in schema if e[0] in names]
-            return flatten_events(
-                env, payload_col=payload_col, keep_cols=tuple(keep), schema=sub,
-                promote=get_promote(),
-            )
+    # each table parses ONLY its own fields. Catalyst cannot prune a shared
+    # from_json for us — the parsed struct is referenced once per leaf
+    # column, so CollapseProject refuses to inline the expensive parse and
+    # the full schema would be decoded for every table. Hand the projection
+    # a per-table sub-schema instead; at 100 TB this is the difference
+    # between decoding every JSON key of every event and decoding the 5
+    # context keys `tracks` needs.
+    def flat_for(names) -> DataFrame:
+        sub = [e for e in schema if e[0] in names]
+        return flatten_events(
+            env, payload_col=payload_col, keep_cols=tuple(keep), schema=sub,
+            promote=promote,
+        )
 
     # string-like collapse (set.go:30-31): when flatten_events will synthesize
     # a collapsed context column (e.g. context_traits from context_traits_0..n),
@@ -454,10 +435,8 @@ def event_table_fanout(
     # the per-event table set is schema metadata: small, driver-side — but
     # LISTING it runs a distinct scan, so it is discovered lazily on first
     # iteration/miss (callers that only touch fixed tables — the q16 tracks
-    # projection — never pay that job). Names are read from the RAW envelope
-    # (one-column parquet scan), not the flattened frame — on the
-    # materialize=True path that would force the checkpoint's full payload
-    # parse just to list distinct names.
+    # projection — never pay that job). Names are read from the envelope
+    # columns, not a flattened frame, so listing them parses no payload.
     # extract (retl/warehouse-as-source, embedded/warehouse/events.go:166-243
     # + rules.go ExtractRules): each extract event lands ONLY in the table
     # named by its event, keyed by record_id (the metadata sidecar,
@@ -640,40 +619,31 @@ def event_table_fanout(
     )
 
     # ---- identity tables ----------------------------------------------
-    _rules: list = []
+    # sources=("merge",): the explicit-rule subset (the other sources are a
+    # config toggle in the reference — enableIDResolution plus
+    # per-destination IsIdentityEnabled, idresolution.go:15-21). Each
+    # consumer (the merge_rules table, the mappings collect or CC edge set,
+    # the idents aggregate) re-parses only the merge rows' two properties.
+    rules = identity_merge_rules(env, payload_col, ("merge",))
 
-    def rules() -> DataFrame:
-        # sources=("merge",): the explicit-rule subset (the other sources
-        # are a config toggle in the reference — enableIDResolution plus
-        # per-destination IsIdentityEnabled, idresolution.go:15-21).
-        # Lazy-checkpointed: three consumers share it (the merge_rules
-        # table, the CC edge set, and the mappings idents aggregate), and
-        # without the checkpoint each re-runs the merge-payload JSON parse.
-        if not _rules:
-            _rules.append(
-                identity_merge_rules(env, payload_col, ("merge",)).localCheckpoint(eager=False)
-            )
-        return _rules[0]
-
-    deferred["rudder_identity_merge_rules"] = lambda: rules().drop("received_at").distinct()
+    deferred["rudder_identity_merge_rules"] = lambda: rules.drop("received_at").distinct()
 
     def _mappings() -> DataFrame:
         # connected_components runs Spark jobs in its convergence loop, so
         # the mappings table is built lazily — callers that only want
         # tracks/identifies never pay for identity resolution
-        r = rules()
-        edges = r.select(
+        edges = rules.select(
             F.col("merge_property_1_value").alias("src"),
             F.col("merge_property_2_value").alias("dst"),
         )
-        # the rules frame's size picks the path: ONE capped collect of the
-        # (already-checkpointed) frame, and at or under the cap the WHOLE
-        # table assembles driver-side — union-find labels AND the idents
-        # max-received_at fold run in Python, so no idents exchange and no
-        # CC jobs run (BASELINE.md q18 decomposition). Output is byte-
-        # identical to the distributed join path (parity-pinned); a larger
-        # graph pays the capped collect and then takes that path.
-        capped = r.select(
+        # the rules frame's size picks the path: ONE capped collect of it,
+        # and at or under the cap the WHOLE table assembles driver-side —
+        # union-find labels AND the idents max-received_at fold run in
+        # Python, so no idents exchange and no CC jobs run (BASELINE.md
+        # q18 decomposition). Output is byte-identical to the distributed
+        # join path (parity-pinned); a larger graph pays the capped collect
+        # and then takes that path.
+        capped = rules.select(
             "merge_property_1_type",
             "merge_property_1_value",
             "merge_property_2_type",
@@ -683,7 +653,7 @@ def event_table_fanout(
         if len(capped) <= MAPPINGS_DRIVER_ROWS:
             return _mappings_driver_side(df.sparkSession, capped)
         comps = connected_components(edges)
-        idents = _mappings_idents(r)
+        idents = _mappings_idents(rules)
         return idents.join(
             comps, idents.merge_property_value == comps.identifier, "left"
         ).select(

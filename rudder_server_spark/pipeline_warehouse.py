@@ -13,12 +13,16 @@ operators over a directory-backed "warehouse" using load_commit's
 atomic pointer-swap snapshots, so a crash between any two steps leaves
 the previous versions live and a REPLAYED upload id is a no-op.
 
-Scale: fan-out parses each payload once against registry schemas; every
-table MERGE keys on its own primary key (one shuffle per table, tables
-independent) and ``commit_tables`` runs them on one pool of writer
-threads, so the per-table jobs overlap; the commit itself is metadata
-(pointer files), never a data rewrite beyond the merged snapshot, and
-the landed counts come from the new snapshots' parquet footers.
+Scale: the deduped, envelope-normalized batch is materialized ONCE (an
+eager localCheckpoint, as the reference's worker reads a staging batch
+once and loads every table from that read), so schema discovery, the
+promotion vote and every table read its blocks instead of re-running the
+staging scan and the dedup shuffle. Every table MERGE keys on its own
+primary key (one shuffle per table, tables independent) and
+``commit_tables`` runs them on one pool of writer threads, so the
+per-table jobs overlap; the commit itself is metadata (pointer files),
+never a data rewrite beyond the merged snapshot, and the landed counts
+come from the new snapshots' parquet footers.
 """
 
 from __future__ import annotations
@@ -30,6 +34,7 @@ from concurrent import futures
 from pyspark.sql import DataFrame, SparkSession
 
 from rudder_server_spark.operators import constraints
+from rudder_server_spark.operators.envelope import normalize_envelope
 from rudder_server_spark.operators.event_tables import event_table_fanout
 from rudder_server_spark.operators.filters import batch_dedup
 from rudder_server_spark.sources import load_commit
@@ -68,7 +73,10 @@ def run_warehouse_upload(
         deduped = batch_dedup(
             events, record_id="record_id" if "record_id" in events.columns else None
         )
-        tables = event_table_fanout(deduped)
+        # normalize BEFORE the checkpoint: an empty message_id draws uuid(),
+        # and every table must read the one id that was materialized
+        env = normalize_envelope(deduped).localCheckpoint(eager=True)
+        tables = event_table_fanout(env, normalized=True)
 
         def merge(name: str, df: DataFrame) -> bool:
             return load_commit.commit_merge(
@@ -127,24 +135,11 @@ def commit_tables(
     def commit(n: str):
         return write(n, overrides[n] if n in overrides else tables[n])
 
-    # identity tables derive from their own merge-payload parse — NOT
-    # the shared flattened frame — and mappings runs the connected-
-    # components convergence loop (several sequential jobs: the critical
-    # path). Launch them first so that loop overlaps all the
-    # standard-table writes instead of queuing behind them.
-    identity = sorted(
-        (n for n in names if n.startswith("rudder_identity_")),
-        # merge_rules first: it is the cheap consumer of the shared lazy
-        # localCheckpoint of the rules frame (event_tables rules()), so
-        # writing it SERIALLY forces that checkpoint exactly once before
-        # mappings' CC loop and avoids the concurrent-first-touch
-        # duplicate merge-payload parse.
-        key=lambda n: (n != "rudder_identity_merge_rules", n),
-    )
-    # the first standard write runs serially too: it materializes the
-    # shared flattened frame's lazy checkpoint exactly once (concurrent
-    # first-touch would re-parse per thread)
-    standard = [n for n in names if not n.startswith("rudder_identity_")]
+    # rudder_identity_mappings first: it is the critical path (a capped
+    # collect, then the table write, or the connected-components loop's
+    # sequential jobs), so it overlaps the other writes instead of queuing
+    # behind them.
+    names.sort(key=lambda n: n != "rudder_identity_mappings")
     # 6 writer threads, not one per table: each write is a single-task
     # job whose submission is driver-side Python (py4j + GIL), so wide
     # pools contend on the driver lock instead of overlapping executor
@@ -153,14 +148,9 @@ def commit_tables(
     # q18 run). Enough width to overlap the CC critical path with the
     # standard tables; a cluster sink sizes this to its commit
     # concurrency, not table count.
-    done, pending = {}, {}
     with futures.ThreadPoolExecutor(max_workers=6) as ex:
-        for group in (identity, standard):
-            if group:
-                done[group[0]] = commit(group[0])
-                pending.update((n, ex.submit(commit, n)) for n in group[1:])
-        done.update((n, f.result()) for n, f in pending.items())
-    return {n: done[n] for n in names}
+        pending = {n: ex.submit(commit, n) for n in names}
+        return {n: f.result() for n, f in pending.items()}
 
 
 def _table_pk(name: str, df: DataFrame) -> tuple:

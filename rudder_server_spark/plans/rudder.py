@@ -312,7 +312,6 @@ def q16(spark, sf):
     state = _fanout_state(spark, sf)
     tables = event_table_fanout(
         pre,
-        materialize=False,
         schemas=state["per_alias"],
         promote=set(state["promote"]),
         normalized=True,
@@ -522,7 +521,6 @@ def q30(spark, sf):
     state = _fanout_state(spark, sf)
     tables = event_table_fanout(
         pre,
-        materialize=False,
         schemas=state["per_alias"],
         promote=set(state["promote"]),
         normalized=True,

@@ -266,13 +266,12 @@ def test_fanout_carries_collapsed_string_like_traits(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    for materialize in (True, False):
-        tables = event_table_fanout(df, materialize=materialize)
-        got = {r["id"]: r.asDict() for r in tables["tracks"].collect()}
-        assert got["m1"]["context_traits"] == "hi", materialize
-        assert got["m2"]["context_traits"] == "xyz", materialize
-        oc = {r["id"]: r.asDict() for r in tables["order_completed"].collect()}
-        assert oc["m1"]["context_traits"] == "hi", materialize
+    tables = event_table_fanout(df)
+    got = {r["id"]: r.asDict() for r in tables["tracks"].collect()}
+    assert got["m1"]["context_traits"] == "hi"
+    assert got["m2"]["context_traits"] == "xyz"
+    oc = {r["id"]: r.asDict() for r in tables["order_completed"].collect()}
+    assert oc["m1"]["context_traits"] == "hi"
 
 
 def test_fanout_colliding_event_names_union(spark):

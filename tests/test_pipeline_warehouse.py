@@ -222,3 +222,52 @@ def test_crashed_upload_retries_remaining_tables_then_replays_free(
     assert replay["tables"] == retry["tables"]
     assert not any(replay["committed"].values())
     assert {r["table_name"]: r["n"] for r in replay["counts"].collect()} == counts
+
+
+def test_upload_runs_the_batch_once(spark, tmp_path):
+    """Every table of an upload reads one materialized batch: the staging
+    payload column is evaluated once per input row, not once per Spark
+    action (schema discovery, the promotion vote, the event-name listing
+    and each table write used to re-run the scan and the dedup)."""
+    import pyspark.sql.functions as F
+
+    rows = []
+    for i in range(10):
+        rows.append(_track(4 * i, 10.0 + i))
+        rows.append(_env(
+            4 * i + 1, "identify", None,
+            '{"type":"identify","traits":{"email":"u%d@x.io","age":%d}}' % (i, 20 + i),
+        ))
+        rows.append(_merge_event(4 * i + 2, f"u{i}@x.io"))
+        rows.append(_env(
+            4 * i + 3, "page", None,
+            '{"type":"page","name":"Home","properties":{"url":"https://x.io/%d"}}' % i,
+        ))
+    evaluations = spark.sparkContext.accumulator(0)
+
+    def counted(payload):
+        evaluations.add(1)
+        return payload
+
+    events = spark.createDataFrame(rows, SCHEMA).withColumn(
+        "payload", F.udf(counted, "string")("payload")
+    )
+    out = run_warehouse_upload(spark, events, str(tmp_path / "wh"), "up-1")
+    counts = {r["table_name"]: r["n"] for r in out["counts"].collect()}
+    assert counts["tracks"] == counts["identifies"] == counts["pages"] == 10
+    assert counts["rudder_identity_merge_rules"] == 10
+    assert evaluations.value == len(rows)
+
+
+def test_generated_message_id_is_the_same_in_every_table(spark, tmp_path):
+    """An empty message_id is replaced by a random uuid (P4); `tracks` and
+    the event's own table land the same generated id."""
+    wh = str(tmp_path / "wh")
+    row = ("",) + _track(0, 10.0)[1:]
+    run_warehouse_upload(spark, spark.createDataFrame([row], SCHEMA), wh, "up-1")
+    ids = {
+        t: [r["id"] for r in load_commit.read_table(spark, f"{wh}/{t}").collect()]
+        for t in ("tracks", "order_completed")
+    }
+    assert len(ids["tracks"]) == 1 and ids["tracks"][0]
+    assert ids["order_completed"] == ids["tracks"]
