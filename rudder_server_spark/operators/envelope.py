@@ -7,10 +7,10 @@ What the gateway/processor stamp onto every event before anything else runs:
 - P3 rudderId: md5 of ``userId + ":" + anonymousId`` formatted as a UUID
   (gateway/handle.go:1053-1060). Deterministic — the same identity pair
   always yields the same rudder_id, which is what makes it a join key.
-- P2 clock-skew corrected event time: when the client did not send an
-  explicit ``timestamp``, ``timestamp = receivedAt - (sentAt -
+- P2 clock-skew corrected event time: ``timestamp = receivedAt - (sentAt -
   originalTimestamp)`` (processor/processor.go:1026-1054); all four time
-  columns are stamped UTC.
+  columns are stamped UTC. The envelope carries no client ``timestamp``
+  column, so the corrected time is the only one.
 
 All pure column expressions — whole-stage codegen, no shuffle: at 100 TB this
 stage is a narrow map fused into the scan.
@@ -59,49 +59,33 @@ def rudder_id(user_id: Column, anonymous_id: Column) -> Column:
 
 
 def derived_timestamp(
-    explicit_ts: Column | None,
-    received_at: Column,
-    sent_at: Column,
-    original_timestamp: Column,
+    received_at: Column, sent_at: Column, original_timestamp: Column
 ) -> Column:
     """P2: clock-skew correction.
 
-    ``timestamp = receivedAt - (sentAt - originalTimestamp)``; an explicit
-    client timestamp wins when present. Timestamp-minus-timestamp yields an
-    exact day-time interval, so the arithmetic is µs-exact and works for
-    both TIMESTAMP and TIMESTAMP_NTZ inputs (the fixtures read as NTZ).
+    ``timestamp = receivedAt - (sentAt - originalTimestamp)``.
+    Timestamp-minus-timestamp yields an exact day-time interval, so the
+    arithmetic is µs-exact and works for both TIMESTAMP and TIMESTAMP_NTZ
+    inputs (the fixtures read as NTZ).
     """
-    skew_corrected = received_at - (sent_at - original_timestamp)
-    if explicit_ts is None:
-        return skew_corrected
-    return F.coalesce(explicit_ts, skew_corrected)
+    return received_at - (sent_at - original_timestamp)
 
 
-def normalize_envelope(
-    df: DataFrame,
-    message_id: str = "message_id",
-    user_id: str = "user_id",
-    anonymous_id: str = "anonymous_id",
-    received_at: str = "received_at",
-    sent_at: str = "sent_at",
-    original_timestamp: str = "original_timestamp",
-    explicit_ts: str | None = None,
-) -> DataFrame:
+def normalize_envelope(df: DataFrame) -> DataFrame:
     """Apply P2+P3+P4 in one narrow projection.
 
     Adds/overwrites: ``message_id`` (sanitized), ``rudder_id``,
-    ``timestamp``. Everything else passes through untouched.
+    ``timestamp``. Everything else passes through untouched. This is the
+    first preprocessing step wherever events enter (before F1 dedup, as the
+    gateway fills ids before the processor dedups on them).
     """
     return (
-        df.withColumn(message_id, sanitize_message_id(F.col(message_id)))
-        .withColumn("rudder_id", rudder_id(F.col(user_id), F.col(anonymous_id)))
+        df.withColumn("message_id", sanitize_message_id(F.col("message_id")))
+        .withColumn("rudder_id", rudder_id(F.col("user_id"), F.col("anonymous_id")))
         .withColumn(
             "timestamp",
             derived_timestamp(
-                F.col(explicit_ts) if explicit_ts else None,
-                F.col(received_at),
-                F.col(sent_at),
-                F.col(original_timestamp),
+                F.col("received_at"), F.col("sent_at"), F.col("original_timestamp")
             ),
         )
     )

@@ -16,7 +16,9 @@ shapes in FIXTURES.md §3):
 Spark-first shape: ONE schema discovery and ONE promotion vote over the
 batch, then each output table is a filter + a ``from_json`` projection of
 only its own fields (a per-table sub-schema, so the parser skips every
-other key). The fan-out materializes nothing itself: a caller that writes
+other key). The input is preprocessed once where events enter
+(``normalize_envelope``, then F1 dedup in the pipelines); the fan-out
+neither normalizes nor dedups. It materializes nothing itself either: a caller that writes
 every table (``run_warehouse_upload``, the streaming ``warehouse_sink``)
 hands it a batch it has already materialized once, so each table reads
 those blocks instead of re-running the staging scan and dedup. The
@@ -74,7 +76,6 @@ class _LazyTables(Mapping):
         return sum(1 for _ in self)
 
 from rudder_server_spark.functions.names import safe_table_name
-from rudder_server_spark.operators.envelope import normalize_envelope
 from rudder_server_spark.operators.flatten import (
     discover_group_schemas,
     discover_promotions,
@@ -100,6 +101,10 @@ ENVELOPE_COLS = (
 # rules-frame rows at or under which rudder_identity_mappings is built on
 # the driver (_mappings_driver_side); over it, connected_components runs
 MAPPINGS_DRIVER_ROWS = 2000
+
+# distinct raw (event_type, event_name) pairs the per-event table discovery
+# collects to the driver; more raises instead of fanning out that many tables
+MAX_EVENT_TABLES = 10_000
 
 _COMMON = [
     "user_id",
@@ -328,34 +333,31 @@ def event_table_fanout(
     payload_col: str = "payload",
     schemas: dict | None = None,
     promote: set | None = None,
-    normalized: bool = False,
-    max_event_tables: int = 10_000,
 ) -> dict[str, DataFrame]:
     """Fan an envelope+payload event frame out into warehouse tables.
 
-    Returns ``{table_name: DataFrame}``. ``df`` must carry the envelope
-    columns of FIXTURES.md §2 (message_id, user_id, anonymous_id,
-    event_type, event_name, received_at, sent_at, original_timestamp) and a
-    JSON ``payload`` column. Pass ``schemas`` (from
+    Returns ``{table_name: DataFrame}``. ``df`` is a preprocessed frame:
+    the envelope columns of FIXTURES.md §2 (message_id, user_id,
+    anonymous_id, event_type, event_name, received_at, sent_at,
+    original_timestamp) already stamped by ``normalize_envelope`` (P2-P4:
+    filled message ids, ``rudder_id``, ``timestamp``), plus a JSON
+    ``payload`` column. The fan-out does not normalize again: ids are
+    filled once, before dedup, where events enter; a second sanitize would
+    only wrap message_id in a fresh non-deterministic (uuid-bearing)
+    expression that hides the input's sort order from Catalyst. Pass
+    ``schemas`` (from
     :func:`discover_fanout_schemas`) to reuse a cached consolidation.
     Every table's plan reads ``df`` again, so a caller that writes many
     tables materializes ``df`` first (a ``localCheckpoint``).
-
-    ``normalized=True`` declares the input already envelope-normalized
-    (P2-P4 applied) and skips re-stamping. This matters when the caller has
-    pre-sorted the input: re-sanitizing message_id would wrap it in a fresh
-    (uuid-bearing, non-deterministic) expression, hiding the input's sort
-    order from Catalyst and forcing downstream ORDER BYs to re-sort.
     """
-    env = df if normalized else normalize_envelope(df)
-    keep = [c for c in ENVELOPE_COLS if c in env.columns]
+    keep = [c for c in ENVELOPE_COLS if c in df.columns]
 
     # Per-table schema consolidation, as the reference does per staging batch
     # (warehouse/schema/schema.go:294-343): context is shared across all
     # event types; properties/userProperties consolidate over track rows,
     # page properties over page rows, traits over identify rows — all five
     # aliases discovered in ONE scan/parse via filtered aggregates.
-    per_alias = schemas if schemas is not None else discover_fanout_schemas(env, payload_col)
+    per_alias = schemas if schemas is not None else discover_fanout_schemas(df, payload_col)
     ctx_schema = per_alias["ctx"]
     track_schema = list(per_alias["track_props"]) + list(per_alias["track_uprops"])
     page_schema = per_alias["page_props"]
@@ -374,7 +376,7 @@ def event_table_fanout(
     # batch). Leaving promote=None down in flatten_events would make every
     # flat_for call re-run discover_promotions, one job per table.
     if promote is None:
-        promote = discover_promotions(env, schema, payload_col)
+        promote = discover_promotions(df, schema, payload_col)
 
     # each table parses ONLY its own fields. Catalyst cannot prune a shared
     # from_json for us — the parsed struct is referenced once per leaf
@@ -386,7 +388,7 @@ def event_table_fanout(
     def flat_for(names) -> DataFrame:
         sub = [e for e in schema if e[0] in names]
         return flatten_events(
-            env, payload_col=payload_col, keep_cols=tuple(keep), schema=sub,
+            df, payload_col=payload_col, keep_cols=tuple(keep), schema=sub,
             promote=promote,
         )
 
@@ -450,7 +452,7 @@ def event_table_fanout(
     for c in ex_prop_cols:
         short = _strip_prefix(c, "properties_")
         ex_unprefixed.append((c, short if short not in taken | {"id", "event"} else c))
-    has_record_id = "record_id" in env.columns
+    has_record_id = "record_id" in df.columns
 
     def make_extract(evs):
         def build():
@@ -487,21 +489,21 @@ def event_table_fanout(
         # reference's per-event-name table model has the same hazard and
         # callers are expected to cap it (VERDICT r3 #3)
         name_rows = (
-            env.where(F.col("event_type").isin(types))
+            df.where(F.col("event_type").isin(types))
             .select("event_type", "event_name")
             .distinct()
-            .limit(max_event_tables + 1)
+            .limit(MAX_EVENT_TABLES + 1)
             .collect()
         )
-        if len(name_rows) > max_event_tables:
+        if len(name_rows) > MAX_EVENT_TABLES:
             raise ValueError(
-                f"event-table discovery found more than max_event_tables="
-                f"{max_event_tables} distinct RAW (event_type, event_name) "
+                f"event-table discovery found more than MAX_EVENT_TABLES="
+                f"{MAX_EVENT_TABLES} distinct RAW (event_type, event_name) "
                 "pairs — counted BEFORE snake_case normalization, since the "
                 "cap bounds this driver collect, so many raw spellings that "
                 "collapse to fewer physical tables still count individually. "
                 "A rogue source is likely emitting unique event names; raise "
-                "max_event_tables consciously or pre-filter/quarantine the "
+                "event_tables.MAX_EVENT_TABLES consciously or pre-filter/quarantine the "
                 "offending source before fan-out"
             )
         # two raw names can normalize to the same table ('Order Completed'
@@ -624,7 +626,7 @@ def event_table_fanout(
     # per-destination IsIdentityEnabled, idresolution.go:15-21). Each
     # consumer (the merge_rules table, the mappings collect or CC edge set,
     # the idents aggregate) re-parses only the merge rows' two properties.
-    rules = identity_merge_rules(env, payload_col, ("merge",))
+    rules = identity_merge_rules(df, payload_col, ("merge",))
 
     deferred["rudder_identity_merge_rules"] = lambda: rules.drop("received_at").distinct()
 

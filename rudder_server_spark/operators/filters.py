@@ -27,51 +27,42 @@ from pyspark.sql import Column, DataFrame, functions as F
 RECORD_STREAM_CATEGORIES = ("cloud", "singer-protocol")
 
 
-def dedup_key(
-    message_id: Column,
-    record_id: Column | None = None,
-    source_category: Column | None = None,
-) -> Column:
-    """F1 dedup key: ``record_id`` for record-stream (retl/warehouse-as-
-    source) events, else ``message_id``.
+def dedup_key(df: DataFrame) -> Column:
+    """F1 dedup key of ``df``'s rows: ``record_id`` for record-stream
+    (retl/warehouse-as-source) events, else ``message_id``.
 
     A re-sync of the same warehouse rows re-delivers the same records under
     FRESH messageIds — messageId-keyed dedup would duplicate every row, so
     the reference keys those sources by recordId instead (rules.go:40-60
     extractCloudRecordID; CanUseRecordID categories 'cloud' and
     'singer-protocol'; ExtractRules key by recordId unconditionally).
-    When no ``source_category`` column exists, a non-null record_id itself
+    The key reads the columns ``df`` carries: without ``record_id`` it is
+    the message id; without ``source_category`` a non-null record_id itself
     marks the record stream — only retl/extract flows populate it. Pure
     column expression — fuses into the scan.
     """
-    if record_id is None:
-        return message_id
+    if "record_id" not in df.columns:
+        return F.col("message_id")
+    record_id = F.col("record_id")
     usable = record_id.isNotNull() & (F.length(record_id) > 0)
-    if source_category is not None:
-        usable = usable & F.lower(F.coalesce(source_category, F.lit(""))).isin(
+    if "source_category" in df.columns:
+        usable = usable & F.lower(F.coalesce(F.col("source_category"), F.lit(""))).isin(
             *RECORD_STREAM_CATEGORIES
         )
-    return F.when(usable, record_id).otherwise(message_id)
+    return F.when(usable, record_id).otherwise(F.col("message_id"))
 
 
-def batch_dedup(
-    df: DataFrame,
-    seq_col: str = "received_at",
-    message_id: str = "message_id",
-    record_id: str | None = None,
-    source_category: str | None = None,
-) -> DataFrame:
-    """F1 batch form: keep the first-seen row per dedup key
+def batch_dedup(df: DataFrame) -> DataFrame:
+    """F1 batch form: keep the first-seen row per :func:`dedup_key`
     (row_number over the key ordered by ingest sequence — processor.go:
-    1941-1983 in-batch dedup + dedup.go keystore semantics)."""
+    1941-1983 in-batch dedup + dedup.go keystore semantics). ``df``'s
+    message ids must already be filled (P4, ``normalize_envelope``): every
+    empty id would otherwise share one key."""
     from pyspark.sql import Window
 
-    key = dedup_key(
-        F.col(message_id),
-        F.col(record_id) if record_id else None,
-        F.col(source_category) if source_category else None,
+    w = Window.partitionBy(dedup_key(df)).orderBy(
+        F.col("received_at").asc(), F.col("message_id").asc()
     )
-    w = Window.partitionBy(key).orderBy(F.col(seq_col).asc(), F.col(message_id).asc())
     return (
         df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
     )

@@ -54,8 +54,10 @@ def run_batch_pipeline(
     """Run the §3.1 stage chain; returns lazy DataFrames.
 
     ``events`` must carry ``source_col`` plus the envelope columns
-    (message_id/record_id/received_at/...); ``config`` is
-    load_workspace_config's output; ``suppression`` a (user_id) frame;
+    (message_id/record_id/received_at/...) of post-gateway events: the
+    gateway has already filled their message ids (P4), so dedup reads them
+    as they are. ``config`` is load_workspace_config's output;
+    ``suppression`` a (user_id) frame;
     ``denied_col`` names an array<string> column of denied consent
     categories when consent enforcement applies.
 
@@ -82,9 +84,7 @@ def run_batch_pipeline(
     rides the corpus-wide dedup shuffle for nothing. At 100 TB the
     exchange width is the cost model; derive late, shuffle narrow.
     """
-    deduped = batch_dedup(
-        events, record_id="record_id" if "record_id" in events.columns else None
-    )
+    deduped = batch_dedup(events)
     for name, expr in (derive_after_dedup or {}).items():
         deduped = deduped.withColumn(name, expr)
     suppressed = (

@@ -13,7 +13,13 @@ operators over a directory-backed "warehouse" using load_commit's
 atomic pointer-swap snapshots, so a crash between any two steps leaves
 the previous versions live and a REPLAYED upload id is a no-op.
 
-Scale: the deduped, envelope-normalized batch is materialized ONCE (an
+Preprocessing is the one rule the streaming path applies too: envelope
+stamping first (P2-P4, which fills empty message ids — the gateway does
+this before the processor dedups, gateway/handle.go:320-328), then F1
+dedup on ``filters.dedup_key``. Deduping first would give every empty id
+one key and keep only one of those events.
+
+Scale: the preprocessed batch is materialized ONCE (an
 eager localCheckpoint, as the reference's worker reads a staging batch
 once and loads every table from that read), so schema discovery, the
 promotion vote and every table read its blocks instead of re-running the
@@ -47,7 +53,8 @@ def run_warehouse_upload(
     upload_id: str,
     destination_type: str | None = None,
 ) -> dict:
-    """Run one §3.2 upload: dedup → fan-out → per-table atomic MERGE.
+    """Run one §3.2 upload: normalize → dedup → fan-out → per-table
+    atomic MERGE.
 
     ``events`` is an envelope+payload frame (a staging batch);
     ``warehouse_dir`` hosts one load_commit table directory per output
@@ -70,13 +77,11 @@ def run_warehouse_upload(
         )
         committed = dict.fromkeys(names, False)
     else:
-        deduped = batch_dedup(
-            events, record_id="record_id" if "record_id" in events.columns else None
-        )
-        # normalize BEFORE the checkpoint: an empty message_id draws uuid(),
-        # and every table must read the one id that was materialized
-        env = normalize_envelope(deduped).localCheckpoint(eager=True)
-        tables = event_table_fanout(env, normalized=True)
+        # ids before dedup: an empty message_id draws its uuid() first, so
+        # empty ids do not share one dedup key; the checkpoint then stores
+        # the one id every table reads
+        env = batch_dedup(normalize_envelope(events)).localCheckpoint(eager=True)
+        tables = event_table_fanout(env)
 
         def merge(name: str, df: DataFrame) -> bool:
             return load_commit.commit_merge(

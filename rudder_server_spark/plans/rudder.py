@@ -314,7 +314,6 @@ def q16(spark, sf):
         pre,
         schemas=state["per_alias"],
         promote=set(state["promote"]),
-        normalized=True,
     )
     return tables["tracks"].localCheckpoint(eager=False).orderBy("id")
 
@@ -374,7 +373,7 @@ def q17(spark, sf):
 # --------------------------------------------------------------------------
 # Q18 streaming warehouse pipeline end-to-end (SURVEY §2.10/M5): the first
 # 1000 fixture events are staged as JSON-lines files, streamed through
-# readStream → watermark dedup (F1) → envelope (P2-P4) → foreachBatch
+# readStream → envelope (P2-P4) → watermark dedup (F1) → foreachBatch
 # fan-out (P8) into parquet tables, and the landed per-table counts are
 # compared against the oracle computed directly on the fixture.
 @register(
@@ -523,7 +522,6 @@ def q30(spark, sf):
         pre,
         schemas=state["per_alias"],
         promote=set(state["promote"]),
-        normalized=True,
     )
     return tables["product_export"].orderBy("id")
 

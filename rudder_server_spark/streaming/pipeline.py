@@ -15,11 +15,16 @@ Spark-first mapping — the batch operators ARE the streaming operators:
 - micro-batching   → Structured Streaming triggers (`availableNow` in
                      tests; `processingTime` in production),
                      ``maxFilesPerTrigger`` for batch shaping
+- preprocessing    → the batch upload's rule: ``normalize_envelope``
+                     first (P2-P4; empty message ids get their uuid here),
+                     then F1 dedup on ``filters.dedup_key`` — so events
+                     without an id do not share one dedup key
 - exact dedup (F1) → ``withWatermark(received_at) +
-                     dropDuplicatesWithinWatermark(message_id)`` — the
+                     dropDuplicatesWithinWatermark(dedup key)`` — the
                      keystore-with-TTL semantics, state-store-backed
-- pipeline stages  → the same envelope/flatten/fan-out functions used in
-                     batch, applied inside ``foreachBatch``
+- pipeline stages  → the same flatten/fan-out functions used in batch,
+                     applied inside ``foreachBatch`` to the preprocessed
+                     stream (sinks do not normalize again)
 - exactly-once-ish → checkpointing + idempotent parquet append per
                      micro-batch (epoch-id-named output committed by the
                      streaming checkpoint, like the reference's
@@ -42,6 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rudder_server_spark.operators.envelope import normalize_envelope
+from rudder_server_spark.operators.filters import dedup_key
 from rudder_server_spark.pipeline_warehouse import commit_tables, run_warehouse_upload
 
 ENVELOPE_SCHEMA = (
@@ -49,6 +55,10 @@ ENVELOPE_SCHEMA = (
     "event_name string, record_id string, received_at timestamp, sent_at timestamp, "
     "original_timestamp timestamp, payload string"
 )
+
+# F1 dedup window: the reference keystore's ~30 day TTL
+# (services/dedup/dedup.go)
+DEDUP_WATERMARK = "30 days"
 
 
 def read_event_stream(
@@ -64,35 +74,25 @@ def read_event_stream(
     return reader.json(source_dir)
 
 
-def dedup_stream(stream: DataFrame, watermark: str = "30 days") -> DataFrame:
+def dedup_stream(stream: DataFrame) -> DataFrame:
     """F1 exact dedup with the reference's ~30d TTL window
-    (services/dedup/dedup.go: keystore TTL): state-store-backed, dropped
-    keys age out with the watermark instead of growing forever.
-
-    The dedup key is record_id for record-stream (retl) events when the
-    stream carries record_id/source_category columns (rules.go:40-60 —
-    re-synced warehouse rows arrive under fresh messageIds), else
-    message_id.
+    (``DEDUP_WATERMARK``; services/dedup/dedup.go keystore TTL):
+    state-store-backed, dropped keys age out with the watermark instead of
+    growing forever. The key is ``filters.dedup_key`` — the batch rule.
+    The stream's message ids must already be filled (``processed_stream``).
     """
-    from rudder_server_spark.operators.filters import dedup_key
-
-    cols = stream.columns
-    key = dedup_key(
-        F.col("message_id"),
-        F.col("record_id") if "record_id" in cols else None,
-        F.col("source_category") if "source_category" in cols else None,
-    )
     return (
-        stream.withColumn("_dedup_key", key)
-        .withWatermark("received_at", watermark)
+        stream.withColumn("_dedup_key", dedup_key(stream))
+        .withWatermark("received_at", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["_dedup_key"])
         .drop("_dedup_key")
     )
 
 
-def processed_stream(stream: DataFrame, watermark: str = "30 days") -> DataFrame:
-    """preprocess stage: dedup + envelope stamping (P2-P4), still a stream."""
-    return normalize_envelope(dedup_stream(stream, watermark))
+def processed_stream(stream: DataFrame) -> DataFrame:
+    """preprocess stage: envelope stamping (P2-P4, fills empty message ids)
+    then dedup, still a stream — the batch upload's order."""
+    return dedup_stream(normalize_envelope(stream))
 
 
 # ---------------------------------------------------------------------------
@@ -117,7 +117,10 @@ def warehouse_sink(
 ):
     """foreachBatch: materialize the event fan-out tables per micro-batch.
 
-    Parquet append per table; the streaming checkpoint provides the
+    The micro-batches must come from a preprocessed stream
+    (``processed_stream``: ids filled, then deduped); the sink does not
+    normalize again, and its eager checkpoint stores the ids every table
+    reads. Parquet append per table; the streaming checkpoint provides the
     effectively-once guarantee the reference gets from its jobsdb txn.
 
     ``schemas``/``promote`` are the cached consolidation verdicts from the
@@ -143,14 +146,10 @@ def warehouse_sink(
         # (measured 0.15-0.2 s/batch at bench scale). On an empty batch the
         # eager checkpoint is one empty-partition job — the rare case pays
         # pennies so the common case executes the plan exactly once.
-        # Normalized before the checkpoint, so every table reads the one
-        # materialized message_id (an empty id draws uuid()).
-        batch_df = normalize_envelope(batch_df).localCheckpoint(eager=True)
+        batch_df = batch_df.localCheckpoint(eager=True)
         if batch_df.isEmpty():
             return
-        tables = event_table_fanout(
-            batch_df, schemas=schemas, promote=promote, normalized=True
-        )
+        tables = event_table_fanout(batch_df, schemas=schemas, promote=promote)
         commit_tables(
             tables, lambda n, df: _write(df, os.path.join(out_dir, n)), destination_type
         )
@@ -235,15 +234,14 @@ def run_warehouse_pipeline(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    watermark: str = "30 days",
     available_now: bool = True,
     schemas: dict | None = None,
     promote: set | None = None,
     destination_type: str | None = None,
 ):
-    """End-to-end: stream JSON event files → dedup → envelope → fan-out
+    """End-to-end: stream JSON event files → envelope → dedup → fan-out
     tables under ``out_dir``. Returns the StreamingQuery."""
-    stream = processed_stream(read_event_stream(spark, source_dir), watermark)
+    stream = processed_stream(read_event_stream(spark, source_dir))
     writer = (
         stream.writeStream.foreachBatch(
             warehouse_sink(out_dir, schemas, promote, destination_type)
@@ -266,7 +264,7 @@ def run_router_pipeline(
     backoff_seconds: int = 60,
     available_now: bool = True,
 ):
-    """End-to-end: stream → dedup/envelope → ordered delivery with
+    """End-to-end: stream → envelope/dedup → ordered delivery with
     retry/DLQ tables under ``out_dir``. Returns the StreamingQuery."""
     stream = processed_stream(read_event_stream(spark, source_dir))
     writer = (

@@ -91,7 +91,7 @@ def test_message_id_sanitize(spark):
 
 
 def test_fanout_tables(spark):
-    tables = event_table_fanout(_mk_events(spark))
+    tables = event_table_fanout(normalize_envelope(_mk_events(spark)))
     assert set(tables) == {
         "tracks", "order_completed", "identifies", "users", "pages", "screens",
         "groups", "aliases", "rudder_identity_merge_rules",
@@ -153,7 +153,7 @@ def test_users_latest_nonnull_traits(spark):
         "event_name string, received_at timestamp, sent_at timestamp, "
         "original_timestamp timestamp, payload string",
     )
-    u = event_table_fanout(df)["users"].head()
+    u = event_table_fanout(normalize_envelope(df))["users"].head()
     assert u["name"] == "N"          # latest non-null
     assert u["email"] == "old@x.com" # null skipped, falls back to earlier
     assert u["received_at"] == T0 + dt.timedelta(60)
@@ -230,7 +230,7 @@ def test_screens_and_groups_tables(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df)
+    tables = event_table_fanout(normalize_envelope(df))
     screens = tables["screens"].collect()
     assert len(screens) == 1
     s = screens[0].asDict()
@@ -266,7 +266,7 @@ def test_fanout_carries_collapsed_string_like_traits(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df)
+    tables = event_table_fanout(normalize_envelope(df))
     got = {r["id"]: r.asDict() for r in tables["tracks"].collect()}
     assert got["m1"]["context_traits"] == "hi"
     assert got["m2"]["context_traits"] == "xyz"
@@ -295,7 +295,7 @@ def test_fanout_colliding_event_names_union(spark):
         " event_name string, received_at timestamp, sent_at timestamp,"
         " original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df)
+    tables = event_table_fanout(normalize_envelope(df))
     oc = tables["order_completed"].collect()
     assert {r["id"] for r in oc} == {"m1", "m2", "m3"}
 
@@ -330,7 +330,7 @@ def test_extract_fanout_recordid_keyed(spark):
         " event_name string, record_id string, received_at timestamp,"
         " sent_at timestamp, original_timestamp timestamp, payload string",
     )
-    tables = event_table_fanout(df)
+    tables = event_table_fanout(normalize_envelope(df))
     assert "product_export" in set(tables)
     pe = {r["id"]: r.asDict() for r in tables["product_export"].collect()}
     # delete+insert: one row per record_id, latest received_at wins
@@ -419,7 +419,7 @@ def test_table_name_expr_matches_python(spark):
         assert got[n] == want, (n, got[n], want)
 
 
-def test_fanout_event_table_cap_bounds_driver_discovery(spark):
+def test_fanout_event_table_cap_bounds_driver_discovery(spark, monkeypatch):
     """A rogue source emitting per-event UNIQUE event names must not OOM
     the driver or fan out unbounded tables: discovery collects at most
     cap+1 distinct names (LIMIT-bounded by construction) and raises a
@@ -427,8 +427,10 @@ def test_fanout_event_table_cap_bounds_driver_discovery(spark):
     name warehouse tables are expected to be a bounded vocabulary)."""
     import pytest
 
+    from rudder_server_spark.operators import event_tables
+
     n = 10_000
-    rows = spark.range(n).select(
+    rows = normalize_envelope(spark.range(n).select(
         F.format_string("msg-%06d", "id").alias("message_id"),
         F.col("id").alias("user_id"),
         F.format_string("anon-%06d", "id").alias("anonymous_id"),
@@ -438,13 +440,17 @@ def test_fanout_event_table_cap_bounds_driver_discovery(spark):
         F.lit(T0).cast("timestamp").alias("sent_at"),
         F.lit(T0).cast("timestamp").alias("original_timestamp"),
         F.lit('{"type":"track","properties":{"x":1}}').alias("payload"),
-    )
-    tables = event_table_fanout(rows, max_event_tables=50)
-    with pytest.raises(ValueError, match="max_event_tables"):
-        set(tables)  # iteration triggers the deferred per-event discovery
+    ))
+    with monkeypatch.context() as m:
+        m.setattr(event_tables, "MAX_EVENT_TABLES", 50)
+        tables = event_table_fanout(rows)
+        with pytest.raises(ValueError, match="MAX_EVENT_TABLES"):
+            set(tables)  # iteration triggers the deferred per-event discovery
     # a sane cap admits the same frame (the fixed tables are unaffected)
-    ok = event_table_fanout(rows, max_event_tables=n + 10)
-    assert "tracks" in ok and len(set(ok)) >= n
+    with monkeypatch.context() as m:
+        m.setattr(event_tables, "MAX_EVENT_TABLES", n + 10)
+        ok = event_table_fanout(rows)
+        assert "tracks" in ok and len(set(ok)) >= n
 
 
 def test_mappings_small_graph_path_identical(spark, monkeypatch):
@@ -494,10 +500,10 @@ def test_mappings_small_graph_path_identical(spark, monkeypatch):
         }),
     ))
     df = spark.createDataFrame(rows, schema)
-    fast = event_table_fanout(df)["rudder_identity_mappings"]
+    fast = event_table_fanout(normalize_envelope(df))["rudder_identity_mappings"]
     with monkeypatch.context() as m:
         m.setattr(event_tables, "MAPPINGS_DRIVER_ROWS", 0)
-        base = event_table_fanout(df)["rudder_identity_mappings"]
+        base = event_table_fanout(normalize_envelope(df))["rudder_identity_mappings"]
     # the driver path is a local frame; only the distributed path joins
     # the idents aggregate to the component labels
     plan = lambda d: d._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731

@@ -271,3 +271,16 @@ def test_generated_message_id_is_the_same_in_every_table(spark, tmp_path):
     }
     assert len(ids["tracks"]) == 1 and ids["tracks"][0]
     assert ids["order_completed"] == ids["tracks"]
+
+
+def test_empty_message_ids_are_filled_before_dedup(spark, tmp_path):
+    """Ids are filled before dedup (P4 then F1, as the gateway fills them
+    before the processor dedups): two track events with an empty
+    message_id each get their own uuid, so all three events land instead
+    of the two empty ids collapsing onto one dedup key."""
+    wh = str(tmp_path / "wh")
+    rows = [("",) + _track(0, 10.0)[1:], ("",) + _track(1, 11.0)[1:], _track(2, 12.0)]
+    run_warehouse_upload(spark, spark.createDataFrame(rows, SCHEMA), wh, "up-1")
+    ids = [r["id"] for r in load_commit.read_table(spark, f"{wh}/tracks").collect()]
+    assert len(ids) == 3
+    assert len(set(ids)) == 3 and all(ids)

@@ -186,9 +186,7 @@ def test_recordid_dedup_key_and_batch_dedup(spark):
         r["message_id"]: r["k"]
         for r in df.select(
             "message_id",
-            dedup_key(
-                F.col("message_id"), F.col("record_id"), F.col("source_category")
-            ).alias("k"),
+            dedup_key(df).alias("k"),
         ).collect()
     }
     assert keys == {"m1": "rec-1", "m2": "rec-1", "m3": "m3", "m4": "m4",
@@ -196,9 +194,7 @@ def test_recordid_dedup_key_and_batch_dedup(spark):
 
     kept = {
         r["message_id"]
-        for r in batch_dedup(
-            df, record_id="record_id", source_category="source_category"
-        ).collect()
+        for r in batch_dedup(df).collect()
     }
     assert kept == {"m1", "m3", "m4", "m5", "m6"}  # m2 = re-synced rec-1
 
@@ -206,7 +202,7 @@ def test_recordid_dedup_key_and_batch_dedup(spark):
     # record stream (extract events key by recordId unconditionally)
     kept2 = {
         r["message_id"]
-        for r in batch_dedup(df.drop("source_category"), record_id="record_id").collect()
+        for r in batch_dedup(df.drop("source_category")).collect()
     }
     assert kept2 == {"m1", "m3", "m5", "m6"}  # m4 now dedups onto m3's rec-2
 

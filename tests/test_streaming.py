@@ -44,6 +44,36 @@ def _write_events(path, events, fname="part-0.json"):
             f.write(json.dumps(e) + "\n")
 
 
+def test_stream_fills_empty_message_ids_before_dedup(spark, tmp_path):
+    """The stream preprocesses as the batch upload does: ids are filled
+    (P4) before the watermark dedup (F1). Nine events with empty ids, read
+    one file per trigger, all land with nine distinct ids; deduping first
+    kept one and held the key "" in state, dropping every later empty id."""
+    from rudder_server_spark.streaming.pipeline import (
+        processed_stream,
+        read_event_stream,
+        warehouse_sink,
+    )
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    for f in range(3):
+        events = [{**_event(3 * f + k), "message_id": ""} for k in range(3)]
+        _write_events(src, events, fname=f"part-{f}.json")
+
+    q = (
+        processed_stream(read_event_stream(spark, src, max_files_per_trigger=1))
+        .writeStream.foreachBatch(warehouse_sink(out))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+
+    tracks = spark.read.parquet(os.path.join(out, "tracks"))
+    assert tracks.count() == 9
+    assert tracks.where(F.length("id") > 0).select("id").distinct().count() == 9
+
+
 def test_warehouse_stream_dedup_and_fanout(spark, tmp_path):
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
