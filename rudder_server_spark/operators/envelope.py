@@ -9,8 +9,8 @@ What the gateway/processor stamp onto every event before anything else runs:
   always yields the same rudder_id, which is what makes it a join key.
 - P2 clock-skew corrected event time: ``timestamp = receivedAt - (sentAt -
   originalTimestamp)`` (processor/processor.go:1026-1054); all four time
-  columns are stamped UTC. The envelope carries no client ``timestamp``
-  column, so the corrected time is the only one.
+  columns are stamped UTC. The envelope has no client ``timestamp``
+  column to prefer.
 
 All pure column expressions — whole-stage codegen, no shuffle: at 100 TB this
 stage is a narrow map fused into the scan.

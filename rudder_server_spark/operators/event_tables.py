@@ -16,12 +16,13 @@ shapes in FIXTURES.md §3):
 Spark-first shape: ONE schema discovery and ONE promotion vote over the
 batch, then each output table is a filter + a ``from_json`` projection of
 only its own fields (a per-table sub-schema, so the parser skips every
-other key). The input is preprocessed once where events enter
+other key). The input is preprocessed where events enter
 (``normalize_envelope``, then F1 dedup in the pipelines); the fan-out
-neither normalizes nor dedups. It materializes nothing itself either: a caller that writes
-every table (``run_warehouse_upload``, the streaming ``warehouse_sink``)
-hands it a batch it has already materialized once, so each table reads
-those blocks instead of re-running the staging scan and dedup. The
+neither normalizes nor dedups, and materializes nothing itself: a caller
+that writes every table (``run_warehouse_upload``, the streaming
+``warehouse_sink``) hands it a batch it has already materialized once, so
+each table reads those blocks instead of re-running the staging scan and
+dedup. The
 per-event-name table set is driver-side metadata (bounded by schema
 cardinality, same as the reference's physical table-per-event design).
 """
@@ -342,10 +343,7 @@ def event_table_fanout(
     original_timestamp) already stamped by ``normalize_envelope`` (P2-P4:
     filled message ids, ``rudder_id``, ``timestamp``), plus a JSON
     ``payload`` column. The fan-out does not normalize again: ids are
-    filled once, before dedup, where events enter; a second sanitize would
-    only wrap message_id in a fresh non-deterministic (uuid-bearing)
-    expression that hides the input's sort order from Catalyst. Pass
-    ``schemas`` (from
+    filled once, before dedup, where events enter. Pass ``schemas`` (from
     :func:`discover_fanout_schemas`) to reuse a cached consolidation.
     Every table's plan reads ``df`` again, so a caller that writes many
     tables materializes ``df`` first (a ``localCheckpoint``).
