@@ -6,12 +6,17 @@ shapes in FIXTURES.md §3):
 
 - ``track``    → ``tracks`` + one ``<snake_cased_event_name>`` table
 - ``identify`` → ``identifies`` + ``users`` (latest non-null traits)
-- ``page``     → ``pages``
+- ``page``     → ``pages``; ``screen`` → ``screens``; ``group`` → ``groups``
 - ``alias``    → ``aliases``
 - ``merge``    → ``rudder_identity_merge_rules`` +
                  ``rudder_identity_mappings`` (connected components, J4)
 - ``extract``  → one ``<snake_cased_event>`` table keyed by record_id
                  (retl record stream; events.go:166-243, ExtractRules)
+
+``EVENT_TABLES`` maps each event type to its fixed table, and
+``table_key`` states every table's MERGE key and order (J6) — the one
+place that decides a table's grain — plus the users load's fold of its
+live rows (J3).
 
 Spark-first shape: ONE schema discovery and ONE promotion vote over the
 batch, then each output table is a filter + a ``from_json`` projection of
@@ -29,7 +34,8 @@ cardinality, same as the reference's physical table-per-event design).
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Callable, Mapping
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 from rudder_server_spark.functions.localframe import local_frame
@@ -107,6 +113,78 @@ MAPPINGS_DRIVER_ROWS = 2000
 # collects to the driver; more raises instead of fanning out that many tables
 MAX_EVENT_TABLES = 10_000
 
+# event type → its fixed table (events.go); track and extract rows also
+# land in one table per event name
+EVENT_TABLES = {
+    "track": "tracks", "identify": "identifies", "page": "pages",
+    "screen": "screens", "group": "groups", "alias": "aliases",
+}
+
+_RULE_COLS = (
+    "merge_property_1_type",
+    "merge_property_1_value",
+    "merge_property_2_type",
+    "merge_property_2_value",
+)
+
+
+class TableKey(NamedTuple):
+    """A warehouse table's MERGE key, the column whose latest value wins
+    among staging rows that share it, and, for a table whose load folds
+    its live rows in, ``fold(live or None, staging)`` → the rows to MERGE."""
+
+    pk: tuple
+    order_col: str
+    fold: Callable | None = None
+
+
+def _latest_traits(df: DataFrame, key: Column, traits) -> DataFrame:
+    """One row per ``key``: the latest ``received_at`` and, for each
+    (column, name) of ``traits``, the column's latest non-null value — the
+    aggregation rewrite of FIRST_VALUE IGNORE NULLS (SURVEY §4.6): a single
+    partial-agg shuffle instead of a full window sort."""
+    return df.groupBy(key).agg(
+        F.max("received_at").alias("received_at"),
+        *[
+            F.max_by(c, F.when(F.col(c).isNotNull(), F.col("received_at"))).alias(short)
+            for c, short in traits
+        ],
+    )
+
+
+def _fold_users(live: DataFrame | None, staging: DataFrame) -> DataFrame:
+    """The users load (J3, redshift.go:859-944, snowflake.go:920-1000): the
+    live rows of the staged ids fold into the new ones, so a trait the
+    upload does not carry keeps its live value. A live row counts as one
+    event at its ``received_at``, as in the reference."""
+    if live is None:
+        return staging
+    both = live.join(staging.select("id"), "id", "left_semi").unionByName(
+        staging, allowMissingColumns=True
+    )
+    traits = [(c, c) for c in both.columns if c not in ("id", "received_at")]
+    return _latest_traits(both, F.col("id"), traits)
+
+
+# J6 delete+insert runs on each table's own key (snowflake.go:478-520):
+# identity rules on the whole rule, mappings on the identifier, discards on
+# the row id. Every other table — the event-type tables, the per-event and
+# extract tables — keys on ``id``; ``users`` too, after its fold.
+_TABLE_KEYS = {
+    "users": TableKey(("id",), "received_at", _fold_users),
+    "rudder_identity_merge_rules": TableKey(_RULE_COLS, _RULE_COLS[0]),
+    "rudder_identity_mappings": TableKey(
+        ("merge_property_type", "merge_property_value"), "merge_property_type"
+    ),
+    "rudder_discards": TableKey(("row_id",), "received_at"),
+}
+_ID_KEY = TableKey(("id",), "received_at")
+
+
+def table_key(name: str) -> TableKey:
+    """The MERGE key and order of warehouse table ``name``."""
+    return _TABLE_KEYS.get(name, _ID_KEY)
+
 _COMMON = [
     "user_id",
     "anonymous_id",
@@ -127,8 +205,18 @@ def _group_cols(schema, group: str) -> list[str]:
     return [name for name, path, _ in schema if path[0] == group]
 
 
-def _strip_prefix(name: str, prefix: str) -> str:
-    return name[len(prefix) :] if name.startswith(prefix) else name
+def _unprefixed(cols, prefix: str, taken: set, *, drop: bool) -> list:
+    """(column, output name) pairs: each column loses ``prefix`` unless
+    the short name is ``taken``; a taken one keeps its prefixed name, or
+    is left out with ``drop``."""
+    out = []
+    for c in cols:
+        short = c[len(prefix) :] if c.startswith(prefix) else c
+        if short not in taken:
+            out.append((c, short))
+        elif not drop:
+            out.append((c, c))
+    return out
 
 
 def discover_fanout_schemas(df: DataFrame, payload_col: str = "payload") -> dict:
@@ -358,11 +446,8 @@ def event_table_fanout(
     per_alias = schemas if schemas is not None else discover_fanout_schemas(df, payload_col)
     ctx_schema = per_alias["ctx"]
     track_schema = list(per_alias["track_props"]) + list(per_alias["track_uprops"])
-    page_schema = per_alias["page_props"]
-    screen_schema = per_alias.get("screen_props", [])
     extract_schema = per_alias.get("extract_props", [])
     traits_schema = per_alias["traits"]
-    group_schema = per_alias.get("group_traits", [])
     # single shared projection (first-wins consolidation) + the top-level
     # scalar payload fields pages/aliases need, riding the SAME from_json
     # parse (one JSON walk per row total)
@@ -402,10 +487,8 @@ def event_table_fanout(
     prop_cols = [n for n, p, _ in track_schema if p[0] == "properties" and n in seen]
     uprop_cols = _group_cols(track_schema, "userProperties")
     trait_cols = _group_cols(traits_schema, "traits")
-    page_prop_cols = _group_cols(page_schema, "properties")
 
-    def common(sel_id: Column = F.col("message_id")) -> list[Column]:
-        return [sel_id.alias("id")] + [F.col(c) for c in _COMMON]
+    common = [F.col("message_id").alias("id")] + [F.col(c) for c in _COMMON]
 
     # Every table below is a DEFERRED thunk: building a table's DataFrame
     # costs real driver/Catalyst time (wide from_json expression trees,
@@ -414,23 +497,22 @@ def event_table_fanout(
     deferred: dict = {}
 
     # ---- tracks + per-event tables ------------------------------------
-    track_common = common() + [
+    track_common = common + [
         F.col("event_name").alias("event_text"),
         snake_expr(F.col("event_name")).alias("event"),
         *[F.col(c) for c in ctx_cols],
     ]
-    deferred["tracks"] = lambda: (
+    deferred[EVENT_TABLES["track"]] = lambda: (
         flat_for(set(ctx_cols)).where(F.col("event_type") == "track").select(*track_common)
     )
 
+    # a property or trait column drops its group prefix unless the short
+    # name is taken: the event tables keep the prefixed name, while pages,
+    # screens and groups (below) leave the column out
     taken = {"id", "event", "event_text", *_COMMON, *ctx_cols}
-    unprefixed = []
-    for c in prop_cols:
-        short = _strip_prefix(c, "properties_")
-        unprefixed.append((c, short if short not in taken else c))
-    for c in uprop_cols:
-        short = _strip_prefix(c, "user_properties_")
-        unprefixed.append((c, short if short not in taken else c))
+    unprefixed = _unprefixed(prop_cols, "properties_", taken, drop=False) + _unprefixed(
+        uprop_cols, "user_properties_", taken, drop=False
+    )
 
     # the per-event table set is schema metadata: small, driver-side — but
     # LISTING it runs a distinct scan, so it is discovered lazily on first
@@ -446,10 +528,7 @@ def event_table_fanout(
     # received_at, event, context_* and unprefixed properties; no user_id
     # (events.go extractOutput sets userId "").
     ex_prop_cols = [n for n, p, _ in extract_schema if p[0] == "properties" and n in seen]
-    ex_unprefixed = []
-    for c in ex_prop_cols:
-        short = _strip_prefix(c, "properties_")
-        ex_unprefixed.append((c, short if short not in taken | {"id", "event"} else c))
+    ex_unprefixed = _unprefixed(ex_prop_cols, "properties_", taken, drop=False)
     has_record_id = "record_id" in df.columns
 
     def make_extract(evs):
@@ -529,93 +608,52 @@ def event_table_fanout(
         return out
 
     # ---- identifies + users -------------------------------------------
-    trait_renames = []
-    for c in trait_cols:
-        short = _strip_prefix(c, "traits_")
-        trait_renames.append((c, short if short not in taken else c))
-    deferred["identifies"] = lambda: (
+    trait_renames = _unprefixed(trait_cols, "traits_", taken, drop=False)
+    deferred[EVENT_TABLES["identify"]] = lambda: (
         flat_for(set(ctx_cols) | set(trait_cols))
         .where(F.col("event_type") == "identify")
         .select(
-            *common(), *[F.col(c) for c in ctx_cols],
+            *common, *[F.col(c) for c in ctx_cols],
             *[F.col(c).alias(short) for c, short in trait_renames],
         )
     )
-    # users: one row per user, latest non-null value per trait — the
-    # aggregation rewrite of FIRST_VALUE IGNORE NULLS (SURVEY §4.6): a single
-    # partial-agg shuffle instead of a full window sort.
-    deferred["users"] = lambda: (
+    # users: one row per user, latest non-null value per trait
+    deferred["users"] = lambda: _latest_traits(
         flat_for(set(trait_cols))
         .where(F.col("event_type") == "identify")
-        .where(F.col("user_id").isNotNull())
-        .groupBy(F.col("user_id").alias("id"))
-        .agg(
-            F.max("received_at").alias("received_at"),
-            *[
-                F.max_by(c, F.when(F.col(c).isNotNull(), F.col("received_at"))).alias(short)
-                for c, short in trait_renames
-            ],
-        )
+        .where(F.col("user_id").isNotNull()),
+        F.col("user_id").alias("id"),
+        trait_renames,
     )
 
-    # ---- pages ---------------------------------------------------------
-    page_props = [
-        (c, _strip_prefix(c, "properties_"))
-        for c in page_prop_cols
-        if _strip_prefix(c, "properties_") not in taken | {"name"}
-    ]
-    deferred["pages"] = lambda: (
-        flat_for(set(ctx_cols) | set(page_prop_cols) | {"_evt_name"})
-        .where(F.col("event_type") == "page")
-        .select(
-            *common(),
-            F.col("_evt_name").alias("name"),
-            *[F.col(c) for c in ctx_cols],
-            *[F.col(c).alias(short) for c, short in page_props],
+    # ---- pages, screens, groups (events.go: page/screen symmetric; group
+    # traits keyed by groupId) --------------------------------------------
+    def make_named(etype, field, name, own, renames):
+        return lambda: (
+            flat_for(set(ctx_cols) | set(own) | {field})
+            .where(F.col("event_type") == etype)
+            .select(
+                *common,
+                F.col(field).alias(name),
+                *[F.col(c) for c in ctx_cols],
+                *[F.col(c).alias(short) for c, short in renames],
+            )
         )
-    )
 
-    # ---- screens (events.go: page/screen symmetric) --------------------
-    screen_prop_cols = _group_cols(screen_schema, "properties")
-    screen_props = [
-        (c, _strip_prefix(c, "properties_"))
-        for c in screen_prop_cols
-        if _strip_prefix(c, "properties_") not in taken | {"name"}
-    ]
-    deferred["screens"] = lambda: (
-        flat_for(set(ctx_cols) | set(screen_prop_cols) | {"_evt_name"})
-        .where(F.col("event_type") == "screen")
-        .select(
-            *common(),
-            F.col("_evt_name").alias("name"),
-            *[F.col(c) for c in ctx_cols],
-            *[F.col(c).alias(short) for c, short in screen_props],
-        )
-    )
-
-    # ---- groups (events.go: group traits keyed by groupId) -------------
-    group_trait_cols = _group_cols(group_schema, "traits")
-    group_renames = [
-        (c, _strip_prefix(c, "traits_"))
-        for c in group_trait_cols
-        if _strip_prefix(c, "traits_") not in taken | {"group_id"}
-    ]
-    deferred["groups"] = lambda: (
-        flat_for(set(ctx_cols) | set(group_trait_cols) | {"_evt_group_id"})
-        .where(F.col("event_type") == "group")
-        .select(
-            *common(),
-            F.col("_evt_group_id").alias("group_id"),
-            *[F.col(c) for c in ctx_cols],
-            *[F.col(c).alias(short) for c, short in group_renames],
-        )
-    )
+    for etype, alias, group, field, name in (
+        ("page", "page_props", "properties", "_evt_name", "name"),
+        ("screen", "screen_props", "properties", "_evt_name", "name"),
+        ("group", "group_traits", "traits", "_evt_group_id", "group_id"),
+    ):
+        own = _group_cols(per_alias.get(alias, []), group)
+        renames = _unprefixed(own, group + "_", taken | {name}, drop=True)
+        deferred[EVENT_TABLES[etype]] = make_named(etype, field, name, own, renames)
 
     # ---- aliases -------------------------------------------------------
-    deferred["aliases"] = lambda: (
+    deferred[EVENT_TABLES["alias"]] = lambda: (
         flat_for({"_evt_previous_id"})
         .where(F.col("event_type") == "alias")
-        .select(*common(), F.col("_evt_previous_id").alias("previous_id"))
+        .select(*common, F.col("_evt_previous_id").alias("previous_id"))
     )
 
     # ---- identity tables ----------------------------------------------
@@ -643,13 +681,9 @@ def event_table_fanout(
         # q18 decomposition). Output is byte-identical to the distributed
         # join path (parity-pinned); a larger graph pays the capped collect
         # and then takes that path.
-        capped = rules.select(
-            "merge_property_1_type",
-            "merge_property_1_value",
-            "merge_property_2_type",
-            "merge_property_2_value",
-            "received_at",
-        ).limit(MAPPINGS_DRIVER_ROWS + 1).collect()
+        capped = rules.select(*_RULE_COLS, "received_at").limit(
+            MAPPINGS_DRIVER_ROWS + 1
+        ).collect()
         if len(capped) <= MAPPINGS_DRIVER_ROWS:
             return _mappings_driver_side(df.sparkSession, capped)
         comps = connected_components(edges)
@@ -684,12 +718,6 @@ def table_name_expr(name: Column) -> Column:
     s = F.when(s.rlike("^[0-9]"), F.concat(F.lit("_"), s)).otherwise(s)
     s = F.when(s.isin(*sorted(RESERVED)), F.concat(F.lit("_"), s)).otherwise(s)
     return F.substring(s, 1, 127)
-
-
-_PLURAL = {
-    "track": "tracks", "identify": "identifies", "page": "pages",
-    "screen": "screens", "group": "groups", "alias": "aliases",
-}
 
 
 def fanout_table_counts(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -773,7 +801,7 @@ def fanout_table_counts(df: DataFrame, payload_col: str = "payload") -> DataFram
         )
     )
     plural = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _PLURAL.items() for x in kv]), et
+        F.create_map(*[F.lit(x) for kv in EVENT_TABLES.items() for x in kv]), et
     )
     pair = lambda t, n: F.struct(  # noqa: E731
         t.alias("table_name"), n.cast("bigint").alias("n")
@@ -856,7 +884,7 @@ def fanout_table_counts(df: DataFrame, payload_col: str = "payload") -> DataFram
     # empty standard tables still get a (name, 0) row, as the reference's
     # per-table upload states do
     seed = local_frame(
-        spark, [(t, 0) for t in [*_PLURAL.values(), "users"]],
+        spark, [(t, 0) for t in [*EVENT_TABLES.values(), "users"]],
         "table_name string, n bigint",
     )
 

@@ -29,6 +29,12 @@ from rudder_server_spark.functions.localframe import local_frame
 # the operator contract; single-threaded probe use only.
 LAST_RUN: dict = {"path": None, "iterations": 0}
 
+# propagation rounds before the distributed loop stops
+_MAX_ITER = 50
+# estimated driver bytes of the deduped edge set at or under which the
+# labels are computed on the driver
+_BROADCAST_BYTES = 256 * 2**20
+
 
 def _union_find(rows) -> list:
     """Driver-side union-find over collected (a, b) edge rows → list of
@@ -58,14 +64,11 @@ def _union_find(rows) -> list:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
     broadcast_threshold: int = 1_000_000,
-    broadcast_bytes: int = 256 * 2**20,
 ) -> DataFrame:
     """Compute connected components over an undirected graph whose node ids
-    are any orderable Spark type (string identifiers, long doc ids, ...).
+    are any orderable Spark type (string identifiers, long doc ids, ...),
+    given as an ``edges`` frame with ``src`` and ``dst`` columns.
 
     Returns (identifier, component) — typed like the input ids — where
     component is the smallest identifier in the node's component under the
@@ -74,7 +77,7 @@ def connected_components(
     Like AQE switching a shuffle join to broadcast when a side turns out
     small, the DEDUPED edge set's size picks the strategy at runtime:
     at or below ``broadcast_threshold`` distinct edges AND an estimated
-    driver footprint below ``broadcast_bytes`` (row counts alone don't bound
+    driver footprint below ``_BROADCAST_BYTES`` (row counts alone don't bound
     memory — long identifier strings could blow the driver), the component
     labels are computed with a driver-side union-find in one pass (the
     iterative shuffle loop costs ~8 scheduled jobs — pure overhead for a
@@ -85,7 +88,7 @@ def connected_components(
     """
     # Undirected: symmetrize, drop self-loops/nulls, dedup.
     e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b")))
     )
     # materialize once — every loop iteration joins against the edges, and
@@ -110,7 +113,7 @@ def connected_components(
             # ~120B of CPython object/dict overhead per edge on top of chars
             est_bytes = (stats["chars"] or 0) + 120 * (stats["n"] or 0)
             fits_driver = (
-                stats["n"] <= 2 * broadcast_threshold and est_bytes <= broadcast_bytes
+                stats["n"] <= 2 * broadcast_threshold and est_bytes <= _BROADCAST_BYTES
             )
             if fits_driver:
                 rows = sym.collect()
@@ -121,7 +124,7 @@ def connected_components(
             # cap+1 rows and decide from the returned length (the separate
             # stats job exists only for the unbounded-string case). Worst-
             # case driver bytes equal the old gated collect's.
-            cap = min(2 * broadcast_threshold, broadcast_bytes // 136)
+            cap = min(2 * broadcast_threshold, _BROADCAST_BYTES // 136)
             rows = sym.limit(cap + 1).collect()
             fits_driver = len(rows) <= cap
 
@@ -140,7 +143,7 @@ def connected_components(
         .select(F.col("a").alias("node"), "lbl")
     ).localCheckpoint(eager=False)
 
-    for _ in range(max_iter):
+    for _ in range(_MAX_ITER):
         # propagate: candidate label for node = min over neighbors' labels ∪ own
         nbr = (
             sym.join(labels.withColumnRenamed("node", "b2"), sym.b == F.col("b2"))

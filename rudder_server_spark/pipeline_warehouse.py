@@ -23,12 +23,14 @@ Scale: the preprocessed batch is materialized ONCE (an
 eager localCheckpoint, as the reference's worker reads a staging batch
 once and loads every table from that read), so schema discovery, the
 promotion vote and every table read its blocks instead of re-running the
-staging scan and the dedup shuffle. Every table MERGE keys on its own
-primary key (one shuffle per table, tables independent) and
-``commit_tables`` runs them on one pool of writer threads, so the
-per-table jobs overlap; the commit itself is metadata (pointer files),
-never a data rewrite beyond the merged snapshot, and the landed counts
-come from the new snapshots' parquet footers.
+staging scan and the dedup shuffle. Every table MERGE keys on the key
+and order ``event_tables.table_key`` states for it (one shuffle per table,
+tables independent; ``users`` first folds its live rows for the staged
+ids into the upload's, J3) and ``commit_tables`` runs them on one pool
+of writer threads, so the per-table jobs overlap; the commit itself is
+metadata (pointer files), never a data rewrite beyond the merged
+snapshot, and the landed counts come from the new snapshots' parquet
+footers.
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rudder_server_spark.operators import constraints
 from rudder_server_spark.operators.envelope import normalize_envelope
-from rudder_server_spark.operators.event_tables import event_table_fanout
+from rudder_server_spark.operators.event_tables import event_table_fanout, table_key
 from rudder_server_spark.operators.filters import batch_dedup
 from rudder_server_spark.sources import load_commit
 
@@ -84,9 +86,11 @@ def run_warehouse_upload(
         tables = event_table_fanout(env)
 
         def merge(name: str, df: DataFrame) -> bool:
+            key, table_dir = table_key(name), os.path.join(warehouse_dir, name)
+            if key.fold is not None:
+                df = key.fold(load_commit.read_table(spark, table_dir), df)
             return load_commit.commit_merge(
-                spark, df, os.path.join(warehouse_dir, name), upload_id,
-                pk=_table_pk(name, df), order_col=_order_col(df),
+                spark, df, table_dir, upload_id, pk=key.pk, order_col=key.order_col
             )
 
         committed = commit_tables(tables, merge, destination_type)
@@ -157,25 +161,3 @@ def commit_tables(
         pending = {n: ex.submit(commit, n) for n in names}
         return {n: f.result() for n, f in pending.items()}
 
-
-def _table_pk(name: str, df: DataFrame) -> tuple:
-    """MERGE key per warehouse table (snowflake.go:478-520 discriminates
-    the same way: users by id, identity tables by the full rule, extract
-    tables by record id, event tables by message id)."""
-    cols = set(df.columns)
-    if name == "users":
-        return ("id",) if "id" in cols else ("user_id",)
-    if name == "rudder_identity_merge_rules":
-        return tuple(c for c in df.columns)
-    if name == "rudder_identity_mappings":
-        return ("merge_property_type", "merge_property_value")
-    if "record_id" in cols:
-        return ("record_id",)
-    return ("id",) if "id" in cols else (df.columns[0],)
-
-
-def _order_col(df: DataFrame):
-    for c in ("received_at", "sent_at", "timestamp"):
-        if c in df.columns:
-            return c
-    return df.columns[0]

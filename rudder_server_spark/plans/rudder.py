@@ -414,6 +414,7 @@ def q17(spark, sf):
 def q18(spark, sf):
     import os
 
+    from rudder_server_spark.sources.load_commit import footer_rows
     from rudder_server_spark.sources.staged_stream import (
         staged_rudder_events_json,
         stream_scratch_dir,
@@ -458,17 +459,8 @@ def q18(spark, sf):
         # deployment makes: per-table landed counts come from the write
         # commit protocol / manifest, never a post-hoc scan (A6's
         # table-upload counts read jobsdb state, not the warehouse).
-        import pyarrow.parquet as _pq
-
         names = sorted(os.listdir(out))
-        counts = {}
-        for n in names:
-            tdir = os.path.join(out, n)
-            counts[n] = sum(
-                _pq.ParquetFile(os.path.join(tdir, f)).metadata.num_rows
-                for f in os.listdir(tdir)
-                if f.endswith(".parquet")
-            )
+        counts = {n: footer_rows(os.path.join(out, n)) for n in names}
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         spark.conf.set(

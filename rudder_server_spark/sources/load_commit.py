@@ -95,20 +95,22 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     return spark.read.parquet(os.path.join(table_dir, _VERSIONS, v))
 
 
-def row_count(table_dir: str) -> int:
-    """Rows in the live snapshot, summed from its parquet footers — commit
-    metadata, not data: no Spark job (0 for an empty table)."""
+def footer_rows(parquet_dir: str) -> int:
+    """Rows in a directory of parquet files, summed from their footers —
+    commit metadata, not data: no Spark job."""
     import pyarrow.parquet as pq
 
-    v = current_version(table_dir)
-    if v is None:
-        return 0
-    vdir = os.path.join(table_dir, _VERSIONS, v)
     return sum(
-        pq.ParquetFile(os.path.join(vdir, f)).metadata.num_rows
-        for f in os.listdir(vdir)
+        pq.ParquetFile(os.path.join(parquet_dir, f)).metadata.num_rows
+        for f in os.listdir(parquet_dir)
         if f.endswith(".parquet")
     )
+
+
+def row_count(table_dir: str) -> int:
+    """Rows in the live snapshot, from its footers (0 for an empty table)."""
+    v = current_version(table_dir)
+    return 0 if v is None else footer_rows(os.path.join(table_dir, _VERSIONS, v))
 
 
 def commit_overwrite(df: DataFrame, table_dir: str, upload_id: str) -> bool:

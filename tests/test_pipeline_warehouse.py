@@ -284,3 +284,51 @@ def test_empty_message_ids_are_filled_before_dedup(spark, tmp_path):
     ids = [r["id"] for r in load_commit.read_table(spark, f"{wh}/tracks").collect()]
     assert len(ids) == 3
     assert len(set(ids)) == 3 and all(ids)
+
+
+def _identify(i, user_id, traits):
+    import json
+
+    row = _env(i, "identify", None, json.dumps({"type": "identify", "traits": traits}))
+    return row[:1] + (user_id,) + row[2:]
+
+
+def _user_row(spark, wh):
+    rows = load_commit.read_table(spark, f"{wh}/users").collect()
+    assert len(rows) == 1
+    return rows[0]["email"], rows[0]["plan"]
+
+
+def test_later_upload_keeps_users_traits_it_does_not_carry(spark, tmp_path):
+    """J3: the users load folds the live row into the upload's, so a trait
+    the second upload does not carry keeps its live value — the same row
+    the two identifies land in one upload."""
+    first = [_identify(0, 7, {"email": "a@x", "plan": "free"})]
+    second = [_identify(1, 7, {"plan": "pro"})]
+    wh = str(tmp_path / "wh")
+    run_warehouse_upload(spark, spark.createDataFrame(first, SCHEMA), wh, "up-1")
+    run_warehouse_upload(spark, spark.createDataFrame(second, SCHEMA), wh, "up-2")
+    assert _user_row(spark, wh) == ("a@x", "pro")
+
+    one = str(tmp_path / "one")
+    run_warehouse_upload(spark, spark.createDataFrame(first + second, SCHEMA), one, "up-1")
+    assert _user_row(spark, one) == ("a@x", "pro")
+
+
+def test_extract_record_resynced_in_a_later_upload_replaces_its_row(spark, tmp_path):
+    """An extract table keys on the record id across uploads: the record
+    re-synced under a new message id replaces its row."""
+    import json
+
+    schema = SCHEMA.replace("event_name string,", "event_name string, record_id string,")
+
+    def extract(i, email):
+        t = T0 + dt.timedelta(seconds=i)
+        payload = json.dumps({"type": "extract", "properties": {"email": email}})
+        return (f"msg-{i:06d}", None, None, "extract", "Contact Synced", "rec-1", t, t, t, payload)
+
+    wh = str(tmp_path / "wh")
+    run_warehouse_upload(spark, spark.createDataFrame([extract(0, "a@x")], schema), wh, "up-1")
+    run_warehouse_upload(spark, spark.createDataFrame([extract(1, "b@x")], schema), wh, "up-2")
+    rows = load_commit.read_table(spark, f"{wh}/contact_synced").collect()
+    assert [(r["id"], r["email"]) for r in rows] == [("rec-1", "b@x")]
