@@ -16,7 +16,7 @@ shapes in FIXTURES.md §3):
 ``EVENT_TABLES`` maps each event type to its fixed table, and
 ``table_key`` states every table's MERGE key and order (J6) — the one
 place that decides a table's grain — plus the users load's fold of its
-live rows (J3).
+live rows into the whole new table (J3).
 
 Spark-first shape: ONE schema discovery and ONE promotion vote over the
 batch, then each output table is a filter + a ``from_json`` projection of
@@ -131,7 +131,8 @@ _RULE_COLS = (
 class TableKey(NamedTuple):
     """A warehouse table's MERGE key, the column whose latest value wins
     among staging rows that share it, and, for a table whose load folds
-    its live rows in, ``fold(live or None, staging)`` → the rows to MERGE."""
+    its live rows in, ``fold(live or None, staging)`` → the whole new
+    table, committed as an overwrite instead of a MERGE."""
 
     pk: tuple
     order_col: str
@@ -154,14 +155,13 @@ def _latest_traits(df: DataFrame, key: Column, traits) -> DataFrame:
 
 def _fold_users(live: DataFrame | None, staging: DataFrame) -> DataFrame:
     """The users load (J3, redshift.go:859-944, snowflake.go:920-1000): the
-    live rows of the staged ids fold into the new ones, so a trait the
-    upload does not carry keeps its live value. A live row counts as one
-    event at its ``received_at``, as in the reference."""
+    live rows fold with the upload's into the whole new table, so a trait
+    the upload does not carry keeps its live value and a user the upload
+    does not carry keeps its row. A live row counts as one event at its
+    ``received_at``, as in the reference. One aggregate, one shuffle."""
     if live is None:
         return staging
-    both = live.join(staging.select("id"), "id", "left_semi").unionByName(
-        staging, allowMissingColumns=True
-    )
+    both = live.unionByName(staging, allowMissingColumns=True)
     traits = [(c, c) for c in both.columns if c not in ("id", "received_at")]
     return _latest_traits(both, F.col("id"), traits)
 

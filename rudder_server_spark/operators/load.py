@@ -5,8 +5,9 @@
   DESC) = 1`, postgres/load.go:296-309, snowflake.go:478-490), then
   delete+insert into the main table (`DELETE FROM main USING staging` +
   insert, postgres/load.go:280-340; `MERGE INTO` on Snowflake).
-  On parquet the delete+insert is an anti-join + union rewrite; on Delta it
-  would be a transactional MERGE — same logical plan.
+  On parquet the dedup and the delete+insert are one window over the live
+  and staging rows per key (one shuffle, Delta's copy-on-write MERGE shape);
+  on Delta it would be a transactional MERGE — same logical result.
 - Schema consolidation (warehouse/schema/schema.go:294-374): staging
   schemas fold left-to-right with first-type-wins per column, except
   ``text`` beats ``string``; the live warehouse schema overrides both; the
@@ -15,10 +16,17 @@
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 # the 9-type lattice (warehouse/internal/model/schema.go:14-24)
 LATTICE = ("string", "boolean", "int", "bigint", "float", "json", "text", "datetime", "array(boolean)")
+
+
+def _latest_first(order_col: str | tuple) -> list:
+    order = (order_col,) if isinstance(order_col, str) else tuple(order_col)
+    return [F.col(c).desc() for c in order]
 
 
 def dedup_staging(
@@ -30,8 +38,7 @@ def dedup_staging(
     orders by received_at alone because its ids are unique; a deterministic
     tie-break matters when the pk recurs within one staging batch).
     """
-    order = (order_col,) if isinstance(order_col, str) else tuple(order_col)
-    w = Window.partitionBy(*pk).orderBy(*[F.col(c).desc() for c in order])
+    w = Window.partitionBy(*pk).orderBy(*_latest_first(order_col))
     return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
@@ -46,12 +53,30 @@ def merge_into(
     Returns the new table contents (delete-by-key + insert). ``existing``
     None means first load. The caller persists the result (overwrite on
     parquet, or this collapses to a Delta ``MERGE INTO`` at deploy time).
+
+    One window over ``existing`` (tag 0) ∪ ``staging`` (tag 1) per key,
+    staging first and latest first: a key with staging rows keeps its first
+    row, a key without keeps all its live rows. That is one shuffle for the
+    dedup and the delete together. A live row with a null key column never
+    matches a delete (SQL equality), so it always survives, as it does
+    under ``DELETE ... USING``.
     """
-    fresh = dedup_staging(staging, pk, order_col)
     if existing is None:
-        return fresh
-    kept = existing.join(fresh.select(*pk).distinct(), list(pk), "left_anti")
-    return kept.unionByName(fresh, allowMissingColumns=True)
+        return dedup_staging(staging, pk, order_col)
+    w = Window.partitionBy(*pk).orderBy(F.col("_merge_tag").desc(), *_latest_first(order_col))
+    null_key = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in pk])
+    both = existing.withColumn("_merge_tag", F.lit(0)).unionByName(
+        staging.withColumn("_merge_tag", F.lit(1)), allowMissingColumns=True
+    )
+    return (
+        both.withColumn("_merge_rn", F.row_number().over(w))
+        .withColumn("_merge_top", F.first("_merge_tag").over(w))
+        .where(
+            (F.col("_merge_rn") == 1)
+            | ((F.col("_merge_tag") == 0) & ((F.col("_merge_top") == 0) | null_key))
+        )
+        .drop("_merge_tag", "_merge_rn", "_merge_top")
+    )
 
 
 # Per-destination column-count limits (warehouse/integrations/config/

@@ -113,7 +113,7 @@ def run_source_job(
     """
     import os
 
-    from rudder_server_spark.sources.load_commit import commit_overwrite, read_table
+    from rudder_server_spark.sources.load_commit import commit_overwrite, read_table, row_count
 
     job_type = job.get("async_job_type", SOURCE_JOB_TYPE_DELETE)
     if job_type != SOURCE_JOB_TYPE_DELETE:
@@ -131,8 +131,8 @@ def run_source_job(
             job["task_run_id"],
             job["start_time"],
         )
-        before = cur.count()
+        # landed counts from the snapshots' footers, not count jobs
+        before = row_count(tdir)
         committed = commit_overwrite(kept, tdir, f"srcjob-{job['job_id']}")
-        after = read_table(spark, tdir).count()
-        deleted[t] = before - after if committed else 0
+        deleted[t] = before - row_count(tdir) if committed else 0
     return deleted

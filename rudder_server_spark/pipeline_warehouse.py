@@ -24,13 +24,15 @@ eager localCheckpoint, as the reference's worker reads a staging batch
 once and loads every table from that read), so schema discovery, the
 promotion vote and every table read its blocks instead of re-running the
 staging scan and the dedup shuffle. Every table MERGE keys on the key
-and order ``event_tables.table_key`` states for it (one shuffle per table,
-tables independent; ``users`` first folds its live rows for the staged
-ids into the upload's, J3) and ``commit_tables`` runs them on one pool
-of writer threads, so the per-table jobs overlap; the commit itself is
-metadata (pointer files), never a data rewrite beyond the merged
-snapshot, and the landed counts come from the new snapshots' parquet
-footers.
+and order ``event_tables.table_key`` states for it (one window over the
+live and staging rows per table: one shuffle, tables independent);
+``users`` is rebuilt whole instead — its live rows and the upload's fold
+in one aggregate committed as an overwrite (J3). ``commit_tables`` runs
+them on one pool of writer threads, so the per-table jobs overlap; the
+commit itself is metadata (pointer files and the snapshot's schema, so
+reading a live table infers nothing), never a data rewrite beyond the
+merged snapshot, and the landed counts come from the new snapshots'
+parquet footers.
 """
 
 from __future__ import annotations
@@ -88,7 +90,8 @@ def run_warehouse_upload(
         def merge(name: str, df: DataFrame) -> bool:
             key, table_dir = table_key(name), os.path.join(warehouse_dir, name)
             if key.fold is not None:
-                df = key.fold(load_commit.read_table(spark, table_dir), df)
+                live = load_commit.read_table(spark, table_dir)
+                return load_commit.commit_overwrite(key.fold(live, df), table_dir, upload_id)
             return load_commit.commit_merge(
                 spark, df, table_dir, upload_id, pk=key.pk, order_col=key.order_col
             )

@@ -634,7 +634,8 @@ def q29(spark, sf):
 # from events; the staging batch is deduped per key keeping the latest
 # (ts, event_id) and replaces same-key main rows — the reference's
 # delete+insert / MERGE INTO load (postgres/load.go:280-340,
-# snowflake.go:460-520), expressed as anti-join + union on parquet.
+# snowflake.go:460-520), expressed on parquet as one window over main ∪
+# staging per key (the oracle states it as the anti-join + union).
 @register(
     "q33_warehouse_merge",
     """
@@ -656,8 +657,9 @@ def q29(spark, sf):
     doc=(
         "Warehouse merge-load: staging rows deduped per pk on latest "
         "(ts, event_id) replace same-key main rows; output is the post-MERGE "
-        "table. One window over staging + one anti-join — at scale both "
-        "shuffle on the pk, and on Delta this same logical plan is MERGE INTO."
+        "table. One window over main ∪ staging per pk, staging rows first — "
+        "at scale one shuffle on the pk does the dedup and the delete "
+        "together, and on Delta this same result is MERGE INTO."
     ),
     tags=("rudder", "load"),
 )

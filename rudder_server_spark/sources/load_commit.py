@@ -13,11 +13,15 @@ transaction log, without the Delta jar this environment lacks):
 
   table_dir/
     _CURRENT              <- tiny pointer file naming the live version
+    _COMMITTED            <- append-only log of every committed upload id
     _versions/<upload_id>/  <- immutable parquet snapshots
+      _schema.json        <- the snapshot's Spark schema
 
-- ``commit_overwrite`` stages the new snapshot under ``_versions/<id>`` and
-  atomically ``os.replace``s the ``_CURRENT`` pointer. Readers resolve the
-  pointer first, so they always see exactly one complete snapshot.
+- ``commit_overwrite`` stages the new snapshot under ``_versions/<id>``,
+  stores its schema beside the data and atomically ``os.replace``s the
+  ``_CURRENT`` pointer. Readers resolve the pointer first, so they always
+  see exactly one complete snapshot, and read it with the stored schema
+  instead of a schema-inference job (parquet readers skip ``_`` files).
 - A crashed writer leaves an orphan staged directory that is never visible
   (and is reclaimed by ``vacuum``).
 - Commits are idempotent per ``upload_id`` (the reference's upload ids):
@@ -31,14 +35,17 @@ Object stores without atomic rename would use a conditional PUT of
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _POINTER = "_CURRENT"
 _VERSIONS = "_versions"
 _COMMITTED = "_COMMITTED"
+_SCHEMA = "_schema.json"
 
 
 def committed_ids(table_dir: str) -> set[str]:
@@ -92,7 +99,27 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame | None:
     v = current_version(table_dir)
     if v is None:
         return None
-    return spark.read.parquet(os.path.join(table_dir, _VERSIONS, v))
+    path = os.path.join(table_dir, _VERSIONS, v)
+    try:
+        with open(os.path.join(path, _SCHEMA)) as fh:
+            schema = StructType.fromJson(json.load(fh))
+    except FileNotFoundError:  # a snapshot written before schemas were stored
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _nullable(t: DataType) -> DataType:
+    """``t`` with every field, array element and map value nullable — the
+    schema Spark's parquet writer stores and its reader infers back."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def footer_rows(parquet_dir: str) -> int:
@@ -113,24 +140,28 @@ def row_count(table_dir: str) -> int:
     return 0 if v is None else footer_rows(os.path.join(table_dir, _VERSIONS, v))
 
 
+def _write_synced(path: str, text: str) -> None:
+    with open(path, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
+
+
 def commit_overwrite(df: DataFrame, table_dir: str, upload_id: str) -> bool:
     """Publish ``df`` as the table's new contents, atomically.
 
     Returns True if this call performed the commit, False if ``upload_id``
-    was already committed (``refused``). The snapshot is fully written
-    before the pointer moves; a crash at any point leaves the previous
-    version live.
+    was already committed (``refused``). The snapshot and its schema file
+    are fully written before the pointer moves; a crash at any point
+    leaves the previous version live.
     """
     if refused(table_dir, upload_id):
         return False
     staged = os.path.join(table_dir, _VERSIONS, upload_id)
     df.write.mode("overwrite").parquet(staged)
+    _write_synced(os.path.join(staged, _SCHEMA), _nullable(df.schema).json())
     tmp = os.path.join(table_dir, _POINTER + ".tmp")
-    os.makedirs(table_dir, exist_ok=True)
-    with open(tmp, "w") as fh:
-        fh.write(upload_id)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _write_synced(tmp, upload_id)
     os.replace(tmp, os.path.join(table_dir, _POINTER))  # the commit point
     record_commit(table_dir, upload_id)
     return True

@@ -280,3 +280,91 @@ def test_run_source_job_delete_sweep(spark, tmp_path):
     # unknown job type rejected (worker.go:615 invalid sourceJob type)
     with pytest.raises(ValueError):
         run_source_job(spark, wh, ["tracks"], {**job, "async_job_type": "sync"})
+
+
+def _schemas_match_inference(spark, table_dir):
+    """The snapshot's stored schema, and read_table's, against Spark's own
+    inference over the live version directory."""
+    import json as _json
+
+    from pyspark.sql.types import StructType
+
+    v = os.path.join(table_dir, "_versions", current_version(table_dir))
+    with open(os.path.join(v, "_schema.json")) as fh:
+        stored = StructType.fromJson(_json.load(fh))
+    inferred = spark.read.parquet(v).schema
+    return stored == inferred and read_table(spark, table_dir).schema == inferred
+
+
+def test_snapshot_schema_file_matches_parquet_inference(spark, tmp_path):
+    """Each snapshot stores its Spark schema, and read_table reads with it
+    instead of inferring: for every table of a BQ upload of the benchmark's
+    warehouse mix (10 tables plus rudder_discards) and for a frame of
+    nested, non-nullable and timestamp_ntz columns, the stored schema is
+    the one Spark infers from the parquet files."""
+    import datetime
+    import json as _json
+
+    from cdpbench import gen
+    from rudder_server_spark.pipeline_warehouse import run_warehouse_upload
+    from rudder_server_spark.streaming.pipeline import ENVELOPE_SCHEMA
+
+    lines = gen.json_lines(gen.EventSource(1301, gen.WAREHOUSE_MIX).batch(400, 60))
+    long_rule = {"type": "merge", "mergeProperties": [
+        {"type": "email", "value": "v" * 600}, {"type": "anonymousId", "value": "anon-x"}]}
+    ts = "2024-02-01T00:00:05.000Z"
+    lines.append(_json.dumps({
+        "message_id": "long-rule", "user_id": 1, "anonymous_id": "anon-x",
+        "event_type": "merge", "received_at": ts, "sent_at": ts,
+        "original_timestamp": ts, "payload": _json.dumps(long_rule),
+    }))
+    staging = tmp_path / "staging.json"
+    staging.write_text("\n".join(lines) + "\n")
+    wh = str(tmp_path / "wh")
+    events = spark.read.schema(ENVELOPE_SCHEMA).json(str(staging))
+    out = run_warehouse_upload(spark, events, wh, "up-1", destination_type="BQ")
+    assert len(out["tables"]) == 11 and "rudder_discards" in out["tables"]
+    for name in out["tables"]:
+        assert _schemas_match_inference(spark, os.path.join(wh, name)), name
+
+    nested = spark.createDataFrame(
+        [(1, {"a": 1, "b": ["x", None]}, [{"k": 1}], {"m": [1, 2]},
+          datetime.datetime(2024, 1, 1, 12, 0))],
+        "n long not null, s struct<a: int not null, b: array<string>>, "
+        "arr array<struct<k: int>> not null, m map<string, array<int>>, t timestamp_ntz",
+    ).withColumn("d", F.lit(1.5).cast("decimal(10,2)"))
+    t = str(tmp_path / "nested")
+    assert commit_overwrite(nested, t, "up-1") is True
+    assert _schemas_match_inference(spark, t)
+    assert read_table(spark, t).collect() == nested.collect()
+
+
+def _read_jobs(spark, table_dir):
+    """Spark jobs that resolving and reading the live snapshot runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup("read-probe", "read_table")
+    try:
+        read_table(spark, table_dir)
+        return len(sc.statusTracker().getJobIdsForGroup("read-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_snapshot_without_schema_file_still_reads(spark, tmp_path):
+    """A version directory written without the schema file reads by
+    inference; footer_rows and vacuum ignore the file."""
+    from rudder_server_spark.sources.load_commit import footer_rows, row_count
+
+    t = str(tmp_path / "t")
+    for i in range(3):
+        commit_overwrite(spark.range(i + 5).withColumn("s", F.lit("x")), t, f"up-{i}")
+    live = os.path.join(t, "_versions", "up-2")
+    assert footer_rows(live) == row_count(t) == 7
+    assert _read_jobs(spark, t) == 0  # the stored schema: no inference job
+    os.remove(os.path.join(live, "_schema.json"))
+    assert _read_jobs(spark, t) > 0
+    assert read_table(spark, t).count() == 7
+    assert read_table(spark, t).columns == ["id", "s"]
+
+    assert vacuum(t, keep=1) == ["up-0", "up-1"]
+    assert sorted(os.listdir(os.path.join(t, "_versions"))) == ["up-2"]

@@ -332,3 +332,86 @@ def test_extract_record_resynced_in_a_later_upload_replaces_its_row(spark, tmp_p
     run_warehouse_upload(spark, spark.createDataFrame([extract(1, "b@x")], schema), wh, "up-2")
     rows = load_commit.read_table(spark, f"{wh}/contact_synced").collect()
     assert [(r["id"], r["email"]) for r in rows] == [("rec-1", "b@x")]
+
+
+def _users_uploads():
+    """Two uploads whose second rewrites the users table: user 7 gains a
+    trait, user 9 is new, user 8 is carried only by the live table."""
+    first = [
+        _identify(0, 7, {"email": "a@x", "plan": "free"}),
+        _identify(1, 8, {"email": "b@x"}),
+        _track(2, 10.0),
+        _merge_event(3, "a@x"),
+    ]
+    second = [
+        _identify(10, 7, {"plan": "pro"}),
+        _identify(11, 9, {"email": "c@x", "plan": "free"}),
+        _track(12, 12.0),
+        _track(2, 10.0),  # redelivered
+    ]
+    return first, second
+
+
+def _crash_users_pointer_swap(monkeypatch, wh):
+    real = os.replace
+
+    def replace(src, dst):
+        if dst == os.path.join(wh, "users", "_CURRENT"):
+            raise RuntimeError("crash at the users pointer swap")
+        return real(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+def _crash_warehouse_log(monkeypatch, wh):
+    real = load_commit.record_commit
+
+    def record_commit(table_dir, upload_id):
+        if table_dir == wh:
+            raise RuntimeError("crash before the warehouse log append")
+        return real(table_dir, upload_id)
+
+    monkeypatch.setattr(load_commit, "record_commit", record_commit)
+
+
+@pytest.mark.parametrize("crash", [_crash_users_pointer_swap, _crash_warehouse_log])
+def test_crash_in_users_commit_or_warehouse_log_recovers(spark, tmp_path, monkeypatch, crash):
+    """A crash at the users pointer swap, or after every table has
+    committed but before the warehouse log append, leaves every table at
+    its previous or its new version; the retry lands each row once, a
+    later replay runs no Spark job, and the tables equal a crash-free
+    run's."""
+    first, second = (spark.createDataFrame(b, SCHEMA) for b in _users_uploads())
+    ref, wh = str(tmp_path / "ref"), str(tmp_path / "wh")
+    run_warehouse_upload(spark, first, ref, "up-1")
+    before = _landed(spark, ref)
+    run_warehouse_upload(spark, second, ref, "up-2")
+    after = _landed(spark, ref)
+    users = load_commit.read_table(spark, f"{ref}/users").collect()
+    assert {r["id"]: (r["email"], r["plan"]) for r in users} == {
+        7: ("a@x", "pro"), 8: ("b@x", None), 9: ("c@x", "free")
+    }
+
+    run_warehouse_upload(spark, first, wh, "up-1")
+    crash(monkeypatch, wh)
+    with pytest.raises(RuntimeError, match="crash"):
+        run_warehouse_upload(spark, second, wh, "up-2")
+    monkeypatch.undo()
+    assert "up-2" not in load_commit.committed_ids(wh)
+    for name, rows in _landed(spark, wh).items():
+        assert rows in (before.get(name), after[name]), name
+
+    retry = run_warehouse_upload(spark, second, wh, "up-2")
+    assert sorted(retry["tables"]) == sorted(after)
+    assert _landed(spark, wh) == after
+
+    sc = spark.sparkContext
+    sc.setJobGroup("replay-probe", "replay of a committed upload")
+    try:
+        replay = run_warehouse_upload(spark, second, wh, "up-2")
+        jobs = sc.statusTracker().getJobIdsForGroup("replay-probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert not any(replay["committed"].values())
+    assert _landed(spark, wh) == after

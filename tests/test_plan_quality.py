@@ -241,12 +241,18 @@ def test_t26_dup_rate_two_phase_distinct(spark):
 
 
 def test_q33_merge_load_shuffles_on_pk_only(spark):
-    """Merge-load: staging dedup window and the delete anti-join both key on
-    the pk — no nested loop, no cartesian; at 100 TB both sides co-partition
-    on user_id and the merge is one shuffle stage."""
+    """Merge-load: the staging dedup and the delete are one window over
+    main ∪ staging keyed on the pk — no nested loop, no cartesian; at 100 TB
+    the merge is one shuffle stage on user_id, and the plan has no more
+    hash exchanges than the anti-join form had (3: main's dedup, and the
+    staging dedup once for the anti-join's keys and once for its rows)."""
     df = REG["q33_warehouse_merge"].spark_fn(spark, SF_DIR)
     plan = _plan(df)
-    assert "LeftAnti" in plan
+    lines = plan.splitlines()
+    merge = next(i for i, ln in enumerate(lines) if "Window [" in ln)
+    below = next(ln for ln in lines[merge + 1:] if "Exchange " in ln)
+    assert "Exchange hashpartitioning(user_id" in below, plan
+    assert plan.count("Exchange hashpartitioning") <= 3, plan
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
 
 

@@ -104,6 +104,78 @@ def test_merge_into_delete_insert(spark):
     assert dedup_staging(staging, pk=("id",)).count() == 2
 
 
+def _merge_by_anti_join(existing, staging, pk, order_col):
+    """The delete+insert as a staging dedup, an anti-join and a union: the
+    reference form the one-window ``merge_into`` must reproduce."""
+    fresh = dedup_staging(staging, pk, order_col)
+    kept = existing.join(fresh.select(*pk).distinct(), list(pk), "left_anti")
+    return kept.unionByName(fresh, allowMissingColumns=True)
+
+
+def _rows(df):
+    return df.columns, sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_one_window_merge_equals_anti_join_merge(spark):
+    """merge_into is one window over live ∪ staging; it lands the same rows
+    and columns as the anti-join form, null keys included: a live row with
+    a null key column never matches a delete, null-key staging rows
+    collapse as the staging dedup collapses them, and a live key that the
+    staging batch does not carry keeps every row it has."""
+    live = spark.createDataFrame(
+        [
+            ("a", 1, "live-a", "x"),
+            ("b", 1, "live-b", "x"),  # live-only key
+            ("d", 1, "live-d1", "x"),  # live-only key held twice
+            ("d", 2, "live-d2", "x"),
+            (None, 1, "live-null1", "x"),
+            (None, 2, "live-null2", "x"),
+        ],
+        "id string, received_at long, v string, live_only string",
+    )
+    staging = spark.createDataFrame(
+        [
+            ("a", 2, "stage-a-old", "y"),  # duplicate staging keys
+            ("a", 3, "stage-a-new", "y"),
+            ("c", 1, "stage-c", "y"),  # staging-only key
+            (None, 5, "stage-null-old", "y"),
+            (None, 6, "stage-null-new", "y"),
+        ],
+        "id string, received_at long, v string, staging_only string",
+    )
+    got = _rows(merge_into(live, staging, pk=("id",)))
+    assert got == _rows(_merge_by_anti_join(live, staging, ("id",), "received_at"))
+    assert got[0] == ["id", "received_at", "v", "live_only", "staging_only"]
+    assert [r[2] for r in got[1]].count("live-null1") == 1
+    assert "stage-null-new" in [r[2] for r in got[1]]
+
+    # composite key with one null column; tuple order column (ts, then seq)
+    schema = "k1 long, k2 string, ts long, seq long, v string"
+    live2 = spark.createDataFrame(
+        [
+            (1, None, 1, 1, "live-1-null"),
+            (1, "x", 1, 1, "live-1-x"),
+            (2, "y", 1, 1, "live-2-y"),
+            (None, "z", 1, 1, "live-null-z"),
+        ],
+        schema,
+    )
+    staging2 = spark.createDataFrame(
+        [
+            (1, None, 5, 1, "stage-1-null-a"),
+            (1, None, 5, 2, "stage-1-null-b"),  # same ts: seq breaks the tie
+            (1, "x", 3, 1, "stage-1-x"),
+            (3, None, 2, 1, "stage-3-null"),
+            (None, "z", 4, 1, "stage-null-z"),
+        ],
+        schema,
+    )
+    pk, order = ("k1", "k2"), ("ts", "seq")
+    got2 = _rows(merge_into(live2, staging2, pk=pk, order_col=order))
+    assert got2 == _rows(_merge_by_anti_join(live2, staging2, pk, order))
+    assert [r[4] for r in got2[1] if r[:2] == (1, None)] == ["live-1-null", "stage-1-null-b"]
+
+
 def test_schema_consolidation_rules():
     s1 = {"price": "int", "note": "string"}
     s2 = {"price": "float", "note": "text", "extra": "datetime"}
