@@ -124,6 +124,14 @@ def get_spark(
         # expression-bound sets spark.sql.adaptive.advisoryPartitionSizeInBytes
         # through ``extra_conf``.
 
+        # Spark's codegen cache keeps 100 compiled classes (LRU). One
+        # warehouse upload compiles ~145 distinct ones, so at 100 each
+        # upload evicted the previous upload's classes and compiled them
+        # all again (Janino, then the JIT from cold): 15.5 JVM CPU-s per
+        # 5k-event upload on a 4-core host, 11.5 s at 1000, where a
+        # repeated upload compiles 2 classes.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+
         # whole-stage codegen emits one generated class per stage; across
         # ~50 distinct query plans the JVM's default 240 MB code cache fills
         # and the JIT silently stops compiling — later queries then run
