@@ -405,10 +405,9 @@ def _mappings_driver_side(spark, rule_rows) -> DataFrame:
         )
         for (t, v), ts in latest.items()
     ]
-    # local_frame, not plain createDataFrame: the default slicing makes
-    # the single coalesced write task pay one Python-worker round per
-    # slice — measured 4.7 s for a 300-row frame on local[32] vs 0.2 s
-    # (functions/localframe.py)
+    # local_frame, not plain createDataFrame: an Arrow LocalRelation, so
+    # the mappings write scans it in the JVM instead of waiting on a
+    # Python worker per slice (functions/localframe.py)
     return local_frame(
         spark,
         out,

@@ -466,7 +466,8 @@ def group_centroid_diversity(
         )
 
         gf = df.schema[group_col]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [
@@ -556,8 +557,8 @@ def knn_join(
     if not qrows:
         # np.array([]) is shape (0,) so the score closure's A.shape[1]
         # would IndexError on the first non-empty corpus batch
-        return queries.sparkSession.createDataFrame(
-            [], "q_id long, n_id long, sim double, rank long"
+        return local_frame(
+            queries.sparkSession, [], "q_id long, n_id long, sim double, rank long"
         )
     q_ids = [r[0] for r in qrows]
     q_vecs = [list(map(float, r[1])) for r in qrows]
@@ -687,8 +688,8 @@ def knn_join_ivf(
     if not qrows:
         # same empty-query guard as knn_join — the closure's qm would be
         # shape (0,) and every batch lookup would fail
-        return queries.sparkSession.createDataFrame(
-            [], "q_id long, n_id long, sim double, rank long"
+        return local_frame(
+            queries.sparkSession, [], "q_id long, n_id long, sim double, rank long"
         )
     q_ids = [int(r[0]) for r in qrows]
     q_vecs = [list(map(float, r[1])) for r in qrows]
@@ -806,8 +807,8 @@ def mmr_select(
         .collect()
     )
     if not pool:
-        return df.sparkSession.createDataFrame(
-            [], f"rank long, {id_col} long, rel double, mmr_score double"
+        return local_frame(
+            df.sparkSession, [], f"rank long, {id_col} long, rel double, mmr_score double"
         )
     ids = [r[0] for r in pool]
     mat = np.array([list(map(float, r[1])) for r in pool], dtype=np.float64)

@@ -43,6 +43,7 @@ from concurrent import futures
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rudder_server_spark.functions.localframe import local_frame
 from rudder_server_spark.operators import constraints
 from rudder_server_spark.operators.envelope import normalize_envelope
 from rudder_server_spark.operators.event_tables import event_table_fanout, table_key
@@ -100,7 +101,7 @@ def run_warehouse_upload(
         names = sorted(committed)
         load_commit.record_commit(warehouse_dir, upload_id)
     counts = [(n, load_commit.row_count(os.path.join(warehouse_dir, n))) for n in names]
-    counts_df = spark.createDataFrame(counts, "table_name string, n long")
+    counts_df = local_frame(spark, counts, "table_name string, n long")
     return {"tables": names, "committed": committed, "counts": counts_df}
 
 

@@ -8,8 +8,10 @@ gracefully on local[N]:
     cluster scale the deployment overrides it to ~2-3x total cores.
   - UTC session timezone: the reference stamps all times UTC
     (processor/processor.go:1026-1054); keeps parity with the DuckDB oracle.
-  - Arrow enabled: all Python<->JVM transfer (Pandas UDFs, createDataFrame)
-    is vectorized.
+  - Arrow enabled: Pandas UDFs and pandas<->Spark conversions are
+    vectorized. ``createDataFrame`` over a Python list never takes the
+    Arrow path; driver-built frames go through ``local_frame``, which
+    hands Spark a pyarrow Table.
   - Host-sized defaults (``host_settings``): cores, heap, pre-touch and
     scratch come from the host the process runs on; every
     ``SPARK_GRAFT_*`` variable overrides its default.

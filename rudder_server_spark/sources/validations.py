@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from rudder_server_spark.functions.localframe import local_frame
+
 # model/validation.go:6-11 — exact step names
 VERIFYING_OBJECT_STORAGE = "Verifying Object Storage"
 VERIFYING_CONNECTIONS = "Verifying Connections"
@@ -116,7 +118,7 @@ def validate_destination(
                 # objectStorage.Validate: upload + download + cleanup of a
                 # tiny test object — here the engine's own staging write
                 path = os.path.join(staging_dir, TEST_NAMESPACE, "test_object")
-                df = spark.createDataFrame([TEST_PAYLOAD], "id int, val string")
+                df = local_frame(spark, [TEST_PAYLOAD], "id int, val string")
                 df.coalesce(1).write.mode("overwrite").json(path)
                 back = spark.read.schema("id int, val string").json(path).head()
                 if back is None or back["val"] != TEST_PAYLOAD["val"]:
@@ -162,7 +164,7 @@ def validate_destination(
                     else None,
                 )
                 path = os.path.join(staging_dir, TEST_NAMESPACE, TEST_TABLE)
-                df = spark.createDataFrame([TEST_PAYLOAD], "id int, val string")
+                df = local_frame(spark, [TEST_PAYLOAD], "id int, val string")
                 df.write.mode("overwrite").parquet(path)
                 n = spark.read.parquet(path).count()
                 if n != 1:

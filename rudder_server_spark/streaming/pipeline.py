@@ -46,6 +46,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from rudder_server_spark.functions.localframe import local_frame
 from rudder_server_spark.operators.envelope import normalize_envelope
 from rudder_server_spark.operators.filters import dedup_key
 from rudder_server_spark.pipeline_warehouse import commit_tables, run_warehouse_upload
@@ -416,7 +417,7 @@ def suppression_refresh_sink(out_dir: str, suppression_path: str):
         try:
             sup = spark.read.parquet(suppression_path).select("user_id")
         except Exception:  # list not published yet -> suppress nothing
-            sup = spark.createDataFrame([], "user_id long")
+            sup = local_frame(spark, [], "user_id long")
         kept = suppress_users(batch_df, sup, on=("user_id",))
         kept.write.mode("append").parquet(out_dir)
 

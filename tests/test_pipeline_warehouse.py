@@ -10,7 +10,9 @@ import os
 from collections import Counter
 
 import pytest
+from pyspark.sql import DataFrame
 
+from rudder_server_spark.functions.localframe import local_frame
 from rudder_server_spark.pipeline_warehouse import run_warehouse_upload
 from rudder_server_spark.sources import load_commit
 
@@ -415,3 +417,59 @@ def test_crash_in_users_commit_or_warehouse_log_recovers(spark, tmp_path, monkey
     assert jobs == []
     assert not any(replay["committed"].values())
     assert _landed(spark, wh) == after
+
+
+def _with_job_ids(spark, group, fn):
+    """``fn()``'s result and the ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_upload_commits_and_counts_run_no_python_worker(spark, tmp_path, monkeypatch):
+    """No frame an upload commits has a PythonRDD in its lineage (the
+    identity mappings and the counts are driver-built Arrow
+    LocalRelations, functions/localframe.py), and the landed-counts
+    collect runs on the driver with no Spark job."""
+    first, second = (local_frame(spark, b, SCHEMA) for b in _users_uploads())
+    committed, python_fed = set(), []
+    for name in ("commit_merge", "commit_overwrite"):
+
+        def capture(*args, _real=getattr(load_commit, name), **kwargs):
+            df = next(a for a in args if isinstance(a, DataFrame))
+            table = os.path.basename(next(a for a in args if isinstance(a, str)))
+            committed.add(table)
+            if "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString():
+                python_fed.append(table)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(load_commit, name, capture)
+    wh = str(tmp_path / "wh")
+    run_warehouse_upload(spark, first, wh, "up-1")
+    out = run_warehouse_upload(spark, second, wh, "up-2")
+
+    assert {"tracks", "users", "rudder_identity_mappings"} <= committed
+    assert python_fed == []
+    counts, jobs = _with_job_ids(spark, "counts-collect", out["counts"].collect)
+    assert jobs == []
+    assert {r["table_name"]: r["n"] for r in counts}["users"] == 3
+
+
+def test_replayed_upload_runs_no_spark_job_counts_included(spark, tmp_path):
+    """A replayed upload id is refused from the warehouse's log and the
+    footers, and its counts collect runs on the driver: no Spark job from
+    the call to the collected counts."""
+    batch = local_frame(spark, _users_uploads()[0], SCHEMA)
+    wh = str(tmp_path / "wh")
+    landed = run_warehouse_upload(spark, batch, wh, "up-1")["counts"].collect()
+
+    def replay():
+        return run_warehouse_upload(spark, batch, wh, "up-1")["counts"].collect()
+
+    replayed, jobs = _with_job_ids(spark, "replay-probe", replay)
+    assert jobs == []
+    assert replayed == landed

@@ -905,22 +905,44 @@ def test_stream_audit_single_scan_shared_doc(spark):
         assert ops["InMemoryTableScan"] == cache_scans, (name, ops)
 
 
-def test_local_frame_single_slice_for_bounded_relations(spark):
-    """SCALE.md r11 'createDataFrame slice tax': a bare
-    spark.createDataFrame(list) fans a tiny local relation into
-    defaultParallelism slices and every consumer task pays one
-    Python-worker round per slice (measured 4.7 s to write 300 rows
-    through coalesce(1) on local[32]). local_frame must keep bounded
-    relations at ONE slice and scale only by row count."""
+def test_local_frame_is_a_jvm_local_relation(spark):
+    """SCALE.md r11 'createDataFrame slice tax' and its r12 sequel: a
+    frame over a Python RDD makes every task that touches it wait on a
+    Python worker (measured 4.7 s to write 300 rows through coalesce(1)
+    on local[32]). local_frame hands Spark a pyarrow Table instead: a
+    LocalRelation up to spark.sql.execution.arrow.localRelationThreshold
+    (48 MiB), a JVM-only Arrow-batch RDD above it, so no size of driver
+    frame has a PythonRDD in its lineage, and a collect of a
+    LocalRelation runs on the driver with no Spark job."""
     from rudder_server_spark.functions.localframe import local_frame
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
 
     small = local_frame(
         spark, [(i, f"v{i}") for i in range(300)], "id long, v string"
     )
-    assert small.rdd.getNumPartitions() == 1
-    big = local_frame(
-        spark, [(i,) for i in range(250_000)], "id long"
+    big = local_frame(spark, [(i,) for i in range(250_000)], "id long")
+    # 64 one-MiB strings: past the 48 MiB threshold, so the RDD path
+    mib = "x" * (1 << 20)
+    huge = local_frame(spark, [(i, mib) for i in range(64)], "id long, s string")
+    for df in (small, big):
+        assert _optimized(df).startswith("LocalRelation"), _optimized(df)
+    assert not _optimized(huge).startswith("LocalRelation")
+    for df in (small, big, huge):
+        assert "PythonRDD" not in lineage(df)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("local-frame-collect", "collect of a local frame")
+    try:
+        assert len(small.collect()) == 300
+        jobs = sc.statusTracker().getJobIdsForGroup("local-frame-collect")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+
+    empty = local_frame(spark, [], "id long, ts timestamp, tags array<string>")
+    assert empty.schema.simpleString() == (
+        "struct<id:bigint,ts:timestamp,tags:array<string>>"
     )
-    assert 1 < big.rdd.getNumPartitions() <= 4
-    # empty stays constructible
-    assert local_frame(spark, [], "id long").count() == 0
+    assert empty.collect() == []
